@@ -315,7 +315,7 @@ object Cep {
     events
       .select(struct(col("*")).as("_1"),
         timestamp_seconds(col(tsCol)).as("_2"))
-      .withWatermark("_2", watermarkDelay)
+      .eventTimeWatermark("_2", watermarkDelay)
       .as[(E, java.sql.Timestamp)]
       .groupByKey(p => keyOf(p._1))
       .flatMapGroupsWithState(OutputMode.Append,

@@ -82,7 +82,7 @@ object StreamAnalytics {
       // the event-time attribute must reach the stateful operator without
       // disturbing the event's own encoder)
       .select(struct(col("*")).as("_1"), timestamp_seconds(col("ts")).as("_2"))
-      .withWatermark("_2", watermarkDelay)
+      .eventTimeWatermark("_2", watermarkDelay)
       .as[(FunnelEvent, java.sql.Timestamp)]
       .groupByKey(_._1.userId)
       .flatMapGroupsWithState(OutputMode.Append,
@@ -200,7 +200,7 @@ object StreamAnalytics {
     val rank = steps.zipWithIndex.toMap
     events
       .select(struct(col("*")).as("_1"), timestamp_seconds(col("ts")).as("_2"))
-      .withWatermark("_2", watermarkDelay)
+      .eventTimeWatermark("_2", watermarkDelay)
       .as[(FunnelEvent, java.sql.Timestamp)]
       .groupByKey(_._1.userId)
       .flatMapGroupsWithState(OutputMode.Append,

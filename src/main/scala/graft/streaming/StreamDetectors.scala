@@ -126,7 +126,7 @@ object StreamDetectors {
     import spark.implicits._
     clicks
       .withColumn("eventTime", timestamp_seconds(col("timestamp")))
-      .withWatermark("eventTime", watermarkDelay)
+      .eventTimeWatermark("eventTime", watermarkDelay)
       .as[AdClickEvent]
       .groupByKey(e => (e.userId, e.adId))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
@@ -196,7 +196,7 @@ object StreamDetectors {
       .as[TxSide]
     paySide.unionByName(receiptSide)
       .withColumn("eventTime", timestamp_seconds(col("ts")))
-      .withWatermark("eventTime", watermarkDelay)
+      .eventTimeWatermark("eventTime", watermarkDelay)
       .as[TxSide]
       .groupByKey(_.txId)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {

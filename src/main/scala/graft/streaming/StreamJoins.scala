@@ -27,11 +27,11 @@ object StreamJoins {
     val l = pays.filter(col("txId") =!= "")
       .select(col("txId"), col("orderId"),
         timestamp_seconds(col("eventTime")).as("payTime"))
-      .withWatermark("payTime", watermarkDelay)
+      .eventTimeWatermark("payTime", watermarkDelay)
     val r = receipts
       .select(col("txId").as("rTxId"), col("payChannel"),
         timestamp_seconds(col("timestamp")).as("receiptTime"))
-      .withWatermark("receiptTime", watermarkDelay)
+      .eventTimeWatermark("receiptTime", watermarkDelay)
     l.join(r,
       col("txId") === col("rTxId") &&
         col("receiptTime") >= col("payTime") - expr(s"INTERVAL $lowerSec SECONDS") &&
@@ -58,11 +58,11 @@ object StreamJoins {
     val l = pays.filter(col("txId") =!= "")
       .select(col("txId"), col("orderId"),
         timestamp_seconds(col("eventTime")).as("payTime"))
-      .withWatermark("payTime", watermarkDelay)
+      .eventTimeWatermark("payTime", watermarkDelay)
     val r = receipts
       .select(col("txId").as("rTxId"), col("payChannel"),
         timestamp_seconds(col("timestamp")).as("receiptTime"))
-      .withWatermark("receiptTime", watermarkDelay)
+      .eventTimeWatermark("receiptTime", watermarkDelay)
     l.join(r,
       col("txId") === col("rTxId") &&
         col("receiptTime") >= col("payTime") - expr(s"INTERVAL $lowerSec SECONDS") &&
@@ -98,7 +98,7 @@ object StreamJoins {
                   watermarkDelay: String): DataFrame =
     stream
       .withColumn("_fp", md5(col(contentCol).cast("binary")))
-      .withWatermark(tsCol, watermarkDelay)
+      .eventTimeWatermark(tsCol, watermarkDelay)
       .dropDuplicatesWithinWatermark("_fp")
       .drop("_fp")
 
@@ -146,7 +146,7 @@ object StreamJoins {
       col(rightSec).cast("long").as("ts"), col(rightVal).cast("double").as("value"))
     l.unionByName(r)
       .withColumn("eventTime", timestamp_seconds(col("ts")))
-      .withWatermark("eventTime", watermarkDelay)
+      .eventTimeWatermark("eventTime", watermarkDelay)
       .as[AsofTagged]
       .groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {

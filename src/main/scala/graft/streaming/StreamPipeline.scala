@@ -137,7 +137,7 @@ object StreamPipeline {
                        watermarkDelay: String, windowSize: String,
                        k: Int): DataFrame =
     docs
-      .withWatermark(tsCol, watermarkDelay)
+      .eventTimeWatermark(tsCol, watermarkDelay)
       .select(col(tsCol), explode(split(col(textCol), " ")).as("term"))
       .groupBy(window(col(tsCol), windowSize))
       .agg(FreqSketch.sketch(col("term"), k).as("_sk"))
@@ -161,7 +161,7 @@ object StreamPipeline {
     val seen = corpus.select(md5(col(corpusTextCol)).as("_corpus_fp")).distinct()
     stream
       .withColumn("_fp", md5(col(textCol)))
-      .withWatermark(tsCol, watermarkDelay)
+      .eventTimeWatermark(tsCol, watermarkDelay)
       .dropDuplicatesWithinWatermark("_fp")
       .join(seen, col("_fp") === col("_corpus_fp"), "left_anti")
       .drop("_fp")
@@ -195,7 +195,7 @@ object StreamPipeline {
   def semanticIngestStream(stream: DataFrame, idCol: String, vecCol: String,
                            tau: Double, statePath: String,
                            nCentroids: Int = 16): DataStreamWriter[Row] =
-    stream.writeStream.outputMode("append").foreachBatch {
+    stream.twinWriteStream.outputMode("append").foreachBatch {
       (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
@@ -372,7 +372,7 @@ object StreamPipeline {
                           rowsPerBand: Int = 4,
                           tau: Double = 0.7,
                           survivorsOnly: Boolean = false): DataStreamWriter[Row] =
-    stream.writeStream.outputMode("append").foreachBatch {
+    stream.twinWriteStream.outputMode("append").foreachBatch {
       (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
@@ -598,7 +598,7 @@ object StreamPipeline {
   def cosineIngestStream(stream: DataFrame, idCol: String, textCol: String,
                          statePath: String, tau: Double, maxDf: Long = 0L,
                          survivorsOnly: Boolean = false): DataStreamWriter[Row] =
-    stream.writeStream.outputMode("append").foreachBatch {
+    stream.twinWriteStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
@@ -712,7 +712,7 @@ object StreamPipeline {
   def bm25IngestStream(stream: DataFrame, idCol: String, textCol: String,
                        indexPath: String,
                        compactEvery: Int = 0): DataStreamWriter[Row] =
-    stream.writeStream.outputMode("append").foreachBatch {
+    stream.twinWriteStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
@@ -766,7 +766,7 @@ object StreamPipeline {
   def spanIngestStream(stream: DataFrame, idCol: String, textCol: String,
                        statePath: String, n: Int = 12,
                        maxDupFrac: Double = 0.5): DataStreamWriter[Row] =
-    stream.writeStream.outputMode("append").foreachBatch {
+    stream.twinWriteStream.outputMode("append").foreachBatch {
       (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
           val spark = batch.sparkSession

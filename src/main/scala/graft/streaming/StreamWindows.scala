@@ -28,7 +28,7 @@ object StreamWindows {
                          size: String, slide: String,
                          watermarkDelay: String): DataFrame = {
     val w = window(col(tsCol), size, slide)
-    df.withWatermark(tsCol, watermarkDelay)
+    df.eventTimeWatermark(tsCol, watermarkDelay)
       .groupBy((w +: keys.map(col)): _*)
       .agg(count(lit(1)).as("cnt"))
       .select(keys.map(col) :+ col("window.end").cast("long").as("window_end") :+ col("cnt"): _*)
@@ -46,7 +46,7 @@ object StreamWindows {
                                sizeSec: Long, slideSec: Long,
                                watermarkDelay: String): DataFrame = {
     require(sizeSec % slideSec == 0, "size must be a multiple of slide")
-    df.withWatermark(tsCol, watermarkDelay)
+    df.eventTimeWatermark(tsCol, watermarkDelay)
       .groupBy((window(col(tsCol), s"$slideSec seconds") +: keys.map(col)): _*)
       .agg(count(lit(1)).as("_slice_cnt"))
       .groupBy((window(col("window"), s"$sizeSec seconds", s"$slideSec seconds") +: keys.map(col)): _*)
@@ -82,7 +82,7 @@ object StreamWindows {
       .map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim.toLong)
       .getOrElse(Long.MinValue)
     val maxTsMicros = new java.util.concurrent.atomic.AtomicLong(initial)
-    stream.writeStream.outputMode("append").foreachBatch {
+    stream.twinWriteStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         val tsMicros = unix_micros(col(tsCol).cast("timestamp"))
         val wm = maxTsMicros.get() match {
@@ -210,7 +210,7 @@ object StreamWindows {
     val lateMs = latenessSec * 1000L
     val delayed = s"${watermarkDelaySec + latenessSec} seconds"
     pairs
-      .withWatermark("we", delayed)
+      .eventTimeWatermark("we", delayed)
       .as[(String, java.sql.Timestamp)]
       .groupByKey { case (k, we) => (k, we.getTime / 1000L) }
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
@@ -257,7 +257,7 @@ object StreamWindows {
   def tumblingCountStream(df: DataFrame, tsCol: String, keys: Seq[String],
                           size: String, watermarkDelay: String): DataFrame = {
     val w = window(col(tsCol), size)
-    df.withWatermark(tsCol, watermarkDelay)
+    df.eventTimeWatermark(tsCol, watermarkDelay)
       .groupBy((w +: keys.map(col)): _*)
       .agg(count(lit(1)).as("cnt"))
       .select(keys.map(col) :+ col("window.end").cast("long").as("window_end") :+ col("cnt"): _*)
@@ -270,7 +270,7 @@ object StreamWindows {
     * (one shuffle by key, session state bounded by the watermark). */
   def sessionCountStream(df: DataFrame, tsCol: String, keys: Seq[String],
                          gap: String, watermarkDelay: String): DataFrame =
-    df.withWatermark(tsCol, watermarkDelay)
+    df.eventTimeWatermark(tsCol, watermarkDelay)
       .groupBy((session_window(col(tsCol), gap) +: keys.map(col)): _*)
       .agg(count(lit(1)).as("cnt"))
       .select(keys.map(col) ++ Seq(
@@ -284,7 +284,7 @@ object StreamWindows {
     * window, UvCountApp.java:58-79). */
   def distinctCountStream(df: DataFrame, tsCol: String, distinctCol: String,
                           size: String, watermarkDelay: String): DataFrame =
-    df.withWatermark(tsCol, watermarkDelay)
+    df.eventTimeWatermark(tsCol, watermarkDelay)
       // dedup key = (value, containing window): the window struct derives
       // from the watermarked event time, so dedup state for a window is
       // evicted once the watermark passes it
@@ -298,7 +298,7 @@ object StreamWindows {
     * bloom-filter + Redis bitmap (UvCountWithBloomFilterApp.java:87-161). */
   def approxDistinctStream(df: DataFrame, tsCol: String, distinctCol: String,
                            size: String, watermarkDelay: String): DataFrame =
-    df.withWatermark(tsCol, watermarkDelay)
+    df.eventTimeWatermark(tsCol, watermarkDelay)
       .groupBy(window(col(tsCol), size))
       .agg(approx_count_distinct(col(distinctCol)).as("uv_approx"))
       .select(col("window.end").cast("long").as("window_end"), col("uv_approx"))
@@ -347,7 +347,7 @@ object StreamWindows {
                           // latest-wins upsert merges them identically)
                           outputMode: String = "update")(
       sink: (DataFrame, Long) => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    counts.writeStream.outputMode(outputMode).foreachBatch {
+    counts.twinWriteStream.outputMode(outputMode).foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         // update mode runs no-data batches to advance the watermark; they
         // can't change any rank, so skip the state churn entirely
@@ -440,7 +440,7 @@ object StreamWindows {
     events
       .select(window(col("ts"), windowSize).getField("end").as("we"),
         col("user").cast("long").as("user"))
-      .withWatermark("we", watermarkDelay)
+      .eventTimeWatermark("we", watermarkDelay)
       .as[(java.sql.Timestamp, Long)]
       .groupByKey(_._1.getTime / 1000L)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {

@@ -14,8 +14,11 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.shuffle.partitions", "4")
     // AQE off for the TEST session only (r16): on 4-row fixtures every
     // AQE stage is its own job submission and re-plan — pure fixed
-    // latency (measured: the cosineIngestStream tests spend ~80 s per
-    // 3-doc micro-batch, mostly stage tax). Plans also become
+    // latency. The cosineIngestStream tests still take 28–50 s each for
+    // two or three 3–4-doc micro-batches, and that is stage tax: with
+    // the checkpoint-file forks gone (722 → 392 process starts over the
+    // four tests; the rest are parquet state writes) their times moved
+    // by less than run-to-run noise (158 s → 159 s on 4 cores). Plans also become
     // deterministic for the plan-pin suites. Verify/Bench keep the
     // production default (AQE on) — logic, not AQE, is what these
     // fixtures certify.

@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable.ListBuffer
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 
@@ -48,6 +49,54 @@ class CheckpointRecoverySpec extends SparkSuite {
     Files.writeString(Paths.get(inDir, "part2.csv"), "7,1.2.3.4,fail,101\n")
     val q2 = startQuery()
     q2.processAllAvailable(); q2.stop()
+
+    val alarms = results.synchronized(results.toList)
+    assert(alarms.map(w => (w.userId, w.firstFailTs, w.secondFailTs)) === List((7L, 100L, 101L)))
+  }
+
+  test("state written under Spark's default manager survives a restart under the installed one") {
+    import LocalCheckpointFileManager.ConfKey
+    val stock = classOf[org.apache.spark.sql.execution.streaming.checkpointing
+      .FileContextBasedCheckpointFileManager].getName
+    val base = Files.createTempDirectory("graft_cross_ckpt")
+    val inDir = Files.createDirectory(base.resolve("in")).toString
+    val ckpt = base.resolve("ckpt")
+
+    val results = ListBuffer.empty[LoginFailWarning]
+    def startQuery() = {
+      val src = StreamSources.csvStream(spark, inDir, CsvSources.loginSchema)
+        .as[LoginEvent]
+      StreamDetectors.loginFailStream(src, maxGapSec = 2L)
+        .writeStream
+        .option("checkpointLocation", ckpt.toString)
+        .foreachBatch { (batch: Dataset[LoginFailWarning], _: Long) =>
+          results.synchronized { results ++= batch.collect() }
+          ()
+        }
+        .start()
+    }
+    // Hadoop's checksummed local file system leaves a hidden `.<name>.crc`
+    // beside each file it writes; the installed manager leaves none
+    def sidecars(): Set[String] = Files.walk(ckpt.resolve("state")).iterator().asScala
+      .filter { p => val n = p.getFileName.toString; n.startsWith(".") && n.endsWith(".crc") }
+      .map(p => ckpt.relativize(p).toString).toSet
+
+    try {
+      spark.conf.set(ConfKey, stock)
+      Files.writeString(Paths.get(inDir, "part1.csv"), "7,1.2.3.4,fail,100\n")
+      val q1 = startQuery()
+      assert(spark.conf.get(ConfKey) === stock, "a manager set on the session is not overridden")
+      q1.processAllAvailable(); q1.stop()
+      assert(sidecars().nonEmpty, "the default manager wrote the pre-restart state")
+
+      spark.conf.unset(ConfKey)
+      Files.writeString(Paths.get(inDir, "part2.csv"), "7,1.2.3.4,fail,101\n")
+      val before = sidecars()
+      val q2 = startQuery()
+      assert(spark.conf.get(ConfKey) === classOf[LocalCheckpointFileManager].getName)
+      q2.processAllAvailable(); q2.stop()
+      assert(sidecars() -- before === Set.empty, "the installed manager wrote the post-restart state")
+    } finally spark.conf.unset(ConfKey)
 
     val alarms = results.synchronized(results.toList)
     assert(alarms.map(w => (w.userId, w.firstFailTs, w.secondFailTs)) === List((7L, 100L, 101L)))
