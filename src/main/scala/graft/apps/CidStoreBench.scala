@@ -1,6 +1,5 @@
 package graft.apps
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -14,12 +13,7 @@ object CidStoreBench {
   def main(args: Array[String]): Unit = {
     val Array(dir, storeDir) = args.take(2)
     val cells = args.lift(2).map(_.toInt).getOrElse(-1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     // -1 now derives TRUE sqrt-n cells: the 256 clamp was a literal-
     // assignment artifact and lifted in r11 when the broadcast argmax

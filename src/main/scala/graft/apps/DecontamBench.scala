@@ -1,6 +1,6 @@
 package graft.apps
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.streaming.StreamPipeline
@@ -37,11 +37,7 @@ object DecontamBench {
     val sizes =
       if (args.nonEmpty) args.map(_.toInt).toSeq
       else Seq(1000, 10000, 50000, 100000, 500000)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus = 8)
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 

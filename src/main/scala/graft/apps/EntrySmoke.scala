@@ -1,18 +1,9 @@
 package graft.apps
 
-import org.apache.spark.sql.SparkSession
-
 /** Smoke: SparkEntry.entry must return rows > 0 (the driver's contract). */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus = 4)
     val n = graft.SparkEntry.entry(spark).count()
     println(s"ENTRY_SMOKE rows=$n")
     spark.stop()

@@ -2,7 +2,6 @@ package graft.apps
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool: dump `.explain("formatted")` output for a list of registry
@@ -21,13 +20,7 @@ import org.apache.spark.sql.execution.ExplainMode
 object PlanBatch {
   def main(args: Array[String]): Unit = {
     val Array(dir, outDir, suffix, list) = args.take(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     Files.createDirectories(Paths.get(outDir))
     val registry = graft.SparkEntry.queries ++ SoakAudit.soakQueries
     list.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>

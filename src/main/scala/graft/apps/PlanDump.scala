@@ -1,7 +1,5 @@
 package graft.apps
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: execute one registry/soak query against a data directory
   * and print its EXECUTED physical plan (final AQE decisions included) —
   * the drill-down companion to SoakAudit's exchange counts. This is how
@@ -11,13 +9,7 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(dir, name) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val registry = graft.SparkEntry.queries ++ SoakAudit.soakQueries
     val df = registry(name)(spark, dir)
     df.count()

@@ -1,7 +1,5 @@
 package graft.apps
 
-import org.apache.spark.sql.SparkSession
-
 import graft.queries.Catalog
 import graft.sources.Tables
 
@@ -20,16 +18,9 @@ object Run {
   def main(args: Array[String]): Unit = {
     val cmd = args.headOption.getOrElse("list")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_MASTER points Run at a deployment (a cluster URL)
+    val spark = graft.GraftSession.local(
+      conf = sys.env.get("SPARK_MASTER").map("spark.master" -> _).toMap)
     graft.functions.GraftFunctions.register(spark)
     cmd match {
       case "list" =>

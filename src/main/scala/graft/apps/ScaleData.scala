@@ -73,15 +73,7 @@ object ScaleData {
     // session this main created gets stopped on exit
     val ownSession = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).isEmpty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
 
     // one stride per key SPACE, so e.g. custkey shifts identically in
     // customer and orders (strides computed over every PRESENT table so a

@@ -45,11 +45,7 @@ object SegmentBench {
 
   def main(args: Array[String]): Unit = {
     val sizes = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(10000, 50000, 100000)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus = 8)
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 

@@ -1,6 +1,5 @@
 package graft.apps
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -17,12 +16,7 @@ import graft.operators.Dedup
 object SimhashStoreBench {
   def main(args: Array[String]): Unit = {
     val Array(dir, storeDir) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
     var t0 = System.nanoTime()

@@ -575,22 +575,13 @@ object SoakAudit {
   def main(args: Array[String]): Unit = {
     val Array(dir, namesCsv) = args.take(2)
     val names = namesCsv.split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Soaks materialize O(edges) DISK_ONLY checkpoints; Spark leaves
-      // cached blocks UNcompressed by default and a 1.4B-edge table of
-      // two-long rows is ~45 GB raw vs ~1/4 of that under LZ4 — on this
-      // box's 80 GB disk that is the difference between the 100× soak
-      // fitting or dying on ENOSPC. Shuffle files are compressed by
-      // default already; this aligns block storage with them.
-      .config("spark.rdd.compress", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Soaks materialize O(edges) DISK_ONLY checkpoints; Spark leaves
+    // cached blocks UNcompressed by default and a 1.4B-edge table of
+    // two-long rows is ~45 GB raw vs ~1/4 of that under LZ4 — on this
+    // box's 80 GB disk that is the difference between the 100× soak
+    // fitting or dying on ENOSPC. Shuffle files are compressed by
+    // default already; this aligns block storage with them.
+    val spark = graft.GraftSession.local(conf = Map("spark.rdd.compress" -> "true"))
     spark.range(1000000L).selectExpr("sum(id)").collect() // JIT warmup
 
     println("query\tsec\trows\tshuffles\tbroadcasts")

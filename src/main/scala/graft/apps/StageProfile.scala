@@ -3,7 +3,6 @@ package graft.apps
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: per-stage breakdown of ONE registry/soak query — the
   * drill-down a stage-level optimization needs before touching code
@@ -22,13 +21,7 @@ object StageProfile {
   def main(args: Array[String]): Unit = {
     val Array(dir, name) = args.take(2)
     val reps = args.lift(2).flatMap(_.toIntOption).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val registry = graft.SparkEntry.queries ++ SoakAudit.soakQueries
     val fn = registry(name)
     // warmup: codegen, parquet footers, any first-call index persist

@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TernaryExpression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo, Literal, TernaryExpression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -379,9 +380,64 @@ case class SimHash64Expr(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Function registry glue: session-local registration (for library callers)
-  * and a SparkSessionExtensions hook (for `spark.sql.extensions` deploys). */
+/** The native function family, two ways in. Library code builds columns
+  * with the typed constructors below: plain `Column`s over the Catalyst
+  * expressions, so an operator needs nothing registered in its session
+  * and leaves the session's function registry untouched. SQL text
+  * (`Run sql`, `expr("graft_dot(a, b)")`) resolves the `graft_*` names,
+  * which [[register]] (per session) or [[GraftExtensions]] (per deploy)
+  * install from [[all]]. */
 object GraftFunctions {
+  import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+
+  /** `graft_minhash_signature`: `numHashes` minhashes over `k`-token
+    * shingles → array<bigint>. */
+  def minhashSignature(text: Column, k: Int, numHashes: Int): Column =
+    column(MinHashSignatureExpr(expression(text), Literal(k), Literal(numHashes)))
+
+  /** `graft_ngram_hashes`: hashes of the `n`-token grams, deduplicated
+    * when `distinct` → array<bigint>. */
+  def ngramHashes(text: Column, n: Int, distinct: Boolean): Column =
+    column(NgramHashesExpr(expression(text), Literal(n), Literal(distinct)))
+
+  /** `graft_feat_buckets`: bucket ids of the 1..`nMax`-token grams → array<int>. */
+  def featBuckets(text: Column, nMax: Int, buckets: Int): Column =
+    column(FeatBucketsExpr(expression(text), Literal(nMax), Literal(buckets)))
+
+  /** `graft_simhash64` → bigint. */
+  def simhash64(text: Column): Column = column(SimHash64Expr(expression(text)))
+
+  /** `graft_deletion_hashes`: xxhash64 of the ≤`maxDist`-deletion variants
+    * → array<bigint>. */
+  def deletionHashes(text: Column, maxDist: Int): Column =
+    column(DeletionHashesExpr(expression(text), Literal(maxDist)))
+
+  /** `graft_jaccard_sorted` of two sorted hash arrays → double. */
+  def jaccardSorted(a: Column, b: Column): Column =
+    column(JaccardSortedExpr(expression(a), expression(b)))
+
+  /** `graft_dot` of two double arrays → double. */
+  def dot(a: Column, b: Column): Column =
+    column(DotProductExpr(expression(a), expression(b)))
+
+  /** `graft_lsh_bucket`: `planes`-bit hyperplane signature → bigint. */
+  def lshBucket(v: Column, planes: Int): Column =
+    column(LshBucketExpr(expression(v), Literal(planes)))
+
+  /** `graft_random_project` onto `outDim` planes → array<double>. */
+  def randomProject(v: Column, outDim: Int): Column =
+    column(RandomProjectExpr(expression(v), Literal(outDim)))
+
+  /** `graft_bloom_agg`: Spark's `BloomFilterAggregate` over long values,
+    * as an aggregate column → binary sketch. */
+  def bloomAgg(value: Column, expectedItems: Long, numBits: Long): Column =
+    column(new BloomFilterAggregate(expression(value), Literal(expectedItems),
+      Literal(numBits)).toAggregateExpression())
+
+  /** `graft_bloom_contains`: membership probe of a long value against a
+    * constant or scalar-subquery sketch → boolean. */
+  def bloomContains(bloom: Column, value: Column): Column =
+    column(BloomFilterMightContain(expression(bloom), expression(value)))
 
   val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "graft_minhash_signature" -> (args => MinHashSignatureExpr(args(0), args(1), args(2))),
@@ -398,14 +454,11 @@ object GraftFunctions {
     // (Joins.bloomSemiJoin) rather than waiting for InjectRuntimeFilter's
     // heuristics: distributed build (TypedImperativeAggregate, partial
     // merge), codegen'd membership probe.
-    "graft_bloom_agg" -> (args =>
-      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        args(0), args(1), args(2))),
-    "graft_bloom_contains" -> (args =>
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        args(0), args(1))))
+    "graft_bloom_agg" -> (args => new BloomFilterAggregate(args(0), args(1), args(2))),
+    "graft_bloom_contains" -> (args => BloomFilterMightContain(args(0), args(1))))
 
-  /** Idempotent per-session registration; call before `call_function`. */
+  /** Idempotent per-session registration of the `graft_*` SQL names, for
+    * SQL text and `call_function`; the typed constructors above need none. */
   def register(spark: SparkSession): Unit = all.foreach { case (name, builder) =>
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
   }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DecimalType, LongType, StringType}
 import org.apache.spark.storage.StorageLevel
 
+import graft.functions.GraftFunctions
+
 /**
  * Deduplication operators for training-data pipelines: exact, MinHash+LSH,
  * SimHash, n-gram Jaccard, embedding-cosine near-dup.
@@ -145,7 +147,6 @@ object Dedup {
                       k: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
                       tau: Double = 0.7): DataFrame = {
     val numHashes = bands * rowsPerBand
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val docs = df.select(col(idCol).as("id"), col(textCol).as("text"))
     // Signature via the native codegen'd expression (one content hash per
     // shingle + numHashes long hashes, tight loop) — the higher-order
@@ -156,8 +157,7 @@ object Dedup {
     // single scan partition of a small corpus file. The verify text
     // joins below keep reading the plain scan (no signature work there).
     val hashed = spreadNarrowScan(docs, "id")
-      .withColumn("sig", call_function("graft_minhash_signature",
-        col("text"), lit(k), lit(numHashes)))
+      .withColumn("sig", GraftFunctions.minhashSignature(col("text"), k, numHashes))
       .withColumn("fp", md5(col("text")))
       .select(col("id"), col("fp"), col("sig"))
       .localCheckpoint(false)
@@ -335,10 +335,8 @@ object Dedup {
     * text is never re-signed. */
   def minhashStore(df: DataFrame, idCol: String, textCol: String,
                    k: Int = 3, bands: Int = 8, rowsPerBand: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     keeperStore(hashedDocs(df, idCol, textCol,
-      t => call_function("graft_minhash_signature",
-        t, lit(k), lit(bands * rowsPerBand))))
+      t => GraftFunctions.minhashSignature(t, k, bands * rowsPerBand)))
   }
 
   /** md5-family store twin (engine-portable arithmetic — see
@@ -377,11 +375,9 @@ object Dedup {
                          idCol: String, textCol: String, k: Int = 3,
                          bands: Int = 8, rowsPerBand: Int = 4): DataFrame = {
     val portable = minhashStoreIsPortable(store)
-    if (!portable) graft.functions.GraftFunctions.register(store.sparkSession)
     val sigOf: Column => Column =
       if (portable) t => portableSigExpr(t, k, bands * rowsPerBand)
-      else t => call_function("graft_minhash_signature",
-        t, lit(k), lit(bands * rowsPerBand))
+      else t => GraftFunctions.minhashSignature(t, k, bands * rowsPerBand)
     val inHashed = hashedDocs(incoming, idCol, textCol, sigOf)
     store.unionByName(novelKeepers(inHashed, store))
   }
@@ -444,11 +440,9 @@ object Dedup {
                                  textCol: String, k: Int = 3, bands: Int = 8,
                                  rowsPerBand: Int = 4,
                                  tau: Double = 0.7): DataFrame = {
-    graft.functions.GraftFunctions.register(incoming.sparkSession)
     minhashIncrementalCore(incoming, store, corpusText, idCol, textCol,
       k, bands, rowsPerBand, tau,
-      t => call_function("graft_minhash_signature",
-        t, lit(k), lit(bands * rowsPerBand)),
+      t => GraftFunctions.minhashSignature(t, k, bands * rowsPerBand),
       portable = false)
   }
 
@@ -701,9 +695,8 @@ object Dedup {
   /** (id, fp, sig) rows under the native xxhash64 SimHash family. */
   private def simhashHashed(df: DataFrame, idCol: String,
                             textCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol).as("id"), md5(col(textCol)).as("fp"),
-      call_function("graft_simhash64", col(textCol)).as("sig"))
+      GraftFunctions.simhash64(col(textCol)).as("sig"))
   }
 
   /**
@@ -1345,11 +1338,9 @@ object Dedup {
    */
   def duplicatedSpans(df: DataFrame, idCol: String, textCol: String,
                       n: Int = 12): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     // Native codegen'd span fingerprints: one tight loop per doc, 8-byte
     // hashes (not gram strings) through the explode and the exchange.
-    val grams = call_function("graft_ngram_hashes",
-      col(textCol), lit(n), lit(false))
+    val grams = GraftFunctions.ngramHashes(col(textCol), n, distinct = false)
     val base = df.select(col(idCol).as("id"), size(grams).as("n_spans"))
     val hashed = df.select(col(idCol).as("id"), explode(grams).as("h"))
     val dupOcc = hashed.groupBy(col("h"))
@@ -1384,9 +1375,7 @@ object Dedup {
    */
   def spanStore(df: DataFrame, idCol: String, textCol: String,
                 n: Int = 12): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    val grams = call_function("graft_ngram_hashes",
-      col(textCol), lit(n), lit(false))
+    val grams = GraftFunctions.ngramHashes(col(textCol), n, distinct = false)
     df.select(explode(grams).as("h"))
       .groupBy(col("h")).agg(count(lit(1)).as("occ"))
   }
@@ -1458,9 +1447,7 @@ object Dedup {
    */
   def spanStorePerDoc(df: DataFrame, idCol: String, textCol: String,
                       n: Int = 12): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    val grams = call_function("graft_ngram_hashes",
-      col(textCol), lit(n), lit(false))
+    val grams = GraftFunctions.ngramHashes(col(textCol), n, distinct = false)
     df.select(col(idCol).as("id"), explode(grams).as("h"))
       .groupBy(col("id"), col("h")).agg(count(lit(1)).as("cnt"))
   }
@@ -1492,9 +1479,7 @@ object Dedup {
   private def spansScreen(incoming: DataFrame, idCol: String,
                           textCol: String, n: Int,
                           storeOcc: DataFrame => DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(incoming.sparkSession)
-    val grams = call_function("graft_ngram_hashes",
-      col(textCol), lit(n), lit(false))
+    val grams = GraftFunctions.ngramHashes(col(textCol), n, distinct = false)
     val base = incoming.select(col(idCol).as("id"), size(grams).as("n_spans"))
     val hashed = incoming.select(col(idCol).as("id"), explode(grams).as("h"))
     val batchOcc = hashed.groupBy(col("h")).agg(count(lit(1)).as("occ_b"))
@@ -1676,7 +1661,6 @@ object Dedup {
    */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
                    blockCol: String, tau: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     // Token sets hashed to sorted long arrays once per doc; each pair costs
     // one merge walk (native codegen'd expression) instead of interpreted
     // array_intersect/array_union set ops. Value equals string-set Jaccard
@@ -1688,7 +1672,7 @@ object Dedup {
     val b = t.alias("b")
     a.join(b, col("a.blk") === col("b.blk") && col("a.id") < col("b.id"))
       .withColumn("jaccard",
-        call_function("graft_jaccard_sorted", col("a.th"), col("b.th")))
+        GraftFunctions.jaccardSorted(col("a.th"), col("b.th")))
       .filter(col("jaccard") >= tau)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"), col("jaccard"))
   }
@@ -1871,10 +1855,8 @@ object Dedup {
     // co-partitioned self-join instead — identical pairs, identical
     // struct-order orientation, one pair per ROW instead of per array
     // slot. Both regimes verify map-side before the dedup shuffle.
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val t = reps.select(col("blk"), col("rep"), col("s"),
-        explode(call_function("graft_deletion_hashes",
-          col("s"), lit(maxDist))).as("v"))
+        explode(GraftFunctions.deletionHashes(col("s"), maxDist)).as("v"))
       .select(col("blk"), col("v"),
         struct(col("rep"), col("s")).as("m"))
     val wbv = Window.partitionBy(col("blk"), col("v"))
@@ -1973,9 +1955,7 @@ object Dedup {
    */
   def scrubSpans(df: DataFrame, idCol: String, textCol: String,
                  n: Int = 12): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    val grams = call_function("graft_ngram_hashes",
-      col(textCol), lit(n), lit(false))
+    val grams = GraftFunctions.ngramHashes(col(textCol), n, distinct = false)
     val hashed = df.select(col(idCol).as("id"), posexplode(grams))
       .withColumnRenamed("pos", "p").withColumnRenamed("col", "h")
     val dup = hashed.groupBy(col("h"))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions
+
 /**
  * DSIR-style importance weighting ("Data Selection for Language Models
  * via Importance Resampling", Xie et al. 2023): score every document of a
@@ -48,10 +50,9 @@ object Importance {
   /** All unigram+bigram buckets of a doc in one native codegen'd pass
     * ([[graft.functions.FeatBucketsExpr]]) — bit-identical to
     * `ngramFeatures` + `featBucket` (spec-pinned), ~10× faster (the HOF
-    * bigram build is CodegenFallback). Callers must have registered
-    * [[graft.functions.GraftFunctions]]. */
+    * bigram build is CodegenFallback). */
   def featBuckets(text: Column, buckets: Int): Column =
-    call_function("graft_feat_buckets", text, lit(2), lit(buckets))
+    GraftFunctions.featBuckets(text, 2, buckets)
 
   /**
    * Per-document importance weights of `raw` against `target`. Emits one
@@ -62,7 +63,6 @@ object Importance {
                         idCol: String, textCol: String,
                         buckets: Int = 1024): DataFrame = {
     require(buckets > 0, s"buckets must be positive, got $buckets")
-    graft.functions.GraftFunctions.register(raw.sparkSession)
     val rawF = raw
       .select(col(idCol).as("_id"),
         explode(featBuckets(col(textCol), buckets)).as("_b"))
@@ -98,7 +98,6 @@ object Importance {
   def bucketWeightArray(raw: DataFrame, target: DataFrame,
                         textCol: String, buckets: Int = 1024): Array[Double] = {
     require(buckets > 0, s"buckets must be positive, got $buckets")
-    graft.functions.GraftFunctions.register(raw.sparkSession)
     def counts(df: DataFrame): Map[Int, Long] =
       df.select(explode(featBuckets(col(textCol), buckets)).as("_b"))
         .groupBy(col("_b")).agg(count(lit(1)).as("_c"))

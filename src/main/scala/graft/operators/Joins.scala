@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 
+import graft.functions.GraftFunctions
+
 /**
  * Multi-stream join operators (SURVEY.md §2.4).
  *
@@ -137,16 +139,14 @@ object Joins {
   def bloomSemiJoin(fact: DataFrame, factKey: String,
                     dim: DataFrame, dimKey: String,
                     expectedItems: Long, numBits: Long): DataFrame = {
-    graft.functions.GraftFunctions.register(fact.sparkSession)
     // Scalar subquery, not a join: might_contain requires a constant/
     // scalar-subquery sketch, and this is exactly how Spark's own
     // InjectRuntimeFilter shapes it — the one-row aggregate computes once
     // and ships with the task binaries.
-    val bloom = dim.agg(call_function("graft_bloom_agg",
-      xxhash64(col(dimKey)), lit(expectedItems), lit(numBits)).as("_bf")).scalar()
+    val bloom = dim.agg(GraftFunctions.bloomAgg(
+      xxhash64(col(dimKey)), expectedItems, numBits).as("_bf")).scalar()
     fact
-      .filter(call_function("graft_bloom_contains", bloom,
-        xxhash64(col(factKey))))
+      .filter(GraftFunctions.bloomContains(bloom, xxhash64(col(factKey))))
       .join(dim.select(col(dimKey).as("_dk")).distinct(),
         col(factKey) === col("_dk"), "left_semi")
   }

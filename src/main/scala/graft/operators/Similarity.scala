@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions
+
 /**
  * Similarity search over embedding columns (`array<float>`): brute-force
  * cosine top-k as the exact baseline, and an LSH-bucketed (random
@@ -14,9 +16,10 @@ import org.apache.spark.sql.functions._
  *    the corpus scan is a single map-only pass with no shuffle of the
  *    corpus; top-k then shuffles only (query × k) candidate rows.
  *  - Dot products and LSH signatures are native codegen'd Catalyst
- *    expressions (`graft_dot` / `graft_lsh_bucket` — the `zip_with` +
- *    `aggregate` HOF forms are CodegenFallback and cost a boxed lambda per
- *    component; kept as `dotHof`/`lshSignatureHof` bit-parity references).
+ *    expressions ([[GraftFunctions.dot]] / [[GraftFunctions.lshBucket]] —
+ *    the `zip_with` + `aggregate` HOF forms are CodegenFallback and cost a
+ *    boxed lambda per component; kept as `dotHof`/`lshSignatureHof`
+ *    bit-parity references).
  *    Norms are precomputed per side before the join so each pair costs one
  *    dot.
  *  - The LSH variant buckets by a `planes`-bit random-hyperplane signature
@@ -30,9 +33,9 @@ object Similarity {
   /** Dot product of two double-array columns — the native codegen'd
     * expression ([[graft.functions.DotProductExpr]]; the `zip_with` +
     * `aggregate` form is CodegenFallback, one boxed lambda per component,
-    * and the scored join evaluates it |queries| × |corpus| times). Callers
-    * go through the operator entry points, which register the function. */
-  def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
+    * and the scored join evaluates it |queries| × |corpus| times). A plain
+    * column: usable in any session, nothing registered. */
+  def dot(a: Column, b: Column): Column = GraftFunctions.dot(a, b)
 
   /** The declarative fold — kept as the bit-parity reference for
     * [[dot]] (pinned in `SimilaritySpec`). */
@@ -66,7 +69,6 @@ object Similarity {
     * double could flip ranks on last-bit differences. */
   private def bruteForceScored(df: DataFrame, idCol: String, vecCol: String,
                                queryPred: Column): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val base = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("n", norm2(col("v")))
     val queries = base.filter(queryPred)
@@ -191,7 +193,6 @@ object Similarity {
   def bruteForceTopKWhere(df: DataFrame, idCol: String, vecCol: String,
                           queryPred: Column, corpusPred: Column,
                           k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     def prep(d: DataFrame): DataFrame =
       d.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
         .withColumn("n", norm2(col("v")))
@@ -215,7 +216,7 @@ object Similarity {
   /** `planes`-bit random-hyperplane signature of a double-array column —
     * native codegen'd expression ([[graft.functions.LshBucketExpr]]). */
   def lshSignature(v: Column, planes: Int): Column =
-    call_function("graft_lsh_bucket", v, lit(planes))
+    GraftFunctions.lshBucket(v, planes)
 
   /** Declarative HOF form — bit-parity reference for [[lshSignature]]
     * (pinned in `SimilaritySpec`). */
@@ -237,7 +238,6 @@ object Similarity {
    */
   def lshTopK(df: DataFrame, idCol: String, vecCol: String,
               queryPred: Column, k: Int, planes: Int = 8): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val base = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("n", norm2(col("v")))
       .withColumn("bucket", lshSignature(col("v"), planes))
@@ -271,10 +271,9 @@ object Similarity {
   def randomProjection(df: DataFrame, idCol: String, vecCol: String,
                        outDim: Int): DataFrame = {
     require(outDim >= 1, s"outDim must be positive, got $outDim")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol).as("id"),
-      call_function("graft_random_project",
-        col(vecCol).cast("array<double>"), lit(outDim)).as("rp"))
+      GraftFunctions.randomProject(
+        col(vecCol).cast("array<double>"), outDim).as("rp"))
   }
 
   /** Engine-portable twin of [[randomProjection]]: md5-derived plane
@@ -325,7 +324,6 @@ object Similarity {
 
   def lshTopKPortable(df: DataFrame, idCol: String, vecCol: String,
                       queryPred: Column, k: Int, planes: Int = 8): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val base = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("n", norm2(col("v")))
       .withColumn("bucket", portableSignature(col("v"), planes))
@@ -371,7 +369,6 @@ object Similarity {
               queryPred: Column, k: Int,
               nCentroids: Int = 16, nProbe: Int = 4,
               trainIters: Int = 0): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val base = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("n", norm2(col("v")))
     val cents = trainCentroids(base, resolveNCentroids(base, nCentroids), trainIters)
@@ -424,7 +421,6 @@ object Similarity {
                    queryPred: Column, corpusPred: Column, k: Int,
                    nCentroids: Int = 16, nProbe: Int = 4,
                    trainIters: Int = 0): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val base = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("n", norm2(col("v")))
     val cents = trainCentroids(base, resolveNCentroids(base, nCentroids), trainIters)
@@ -672,7 +668,6 @@ object Similarity {
   def buildPqIndex(df: DataFrame, idCol: String, vecCol: String,
                    nCentroids: Int = 16, m: Int = 8, kSub: Int = 16,
                    trainIters: Int = 0, pqIters: Int = 1): (PqModel, DataFrame) = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val base = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("n", norm2(col("v")))
     val model = PqModel(
@@ -705,7 +700,6 @@ object Similarity {
   def encodePqIndexWith(model: PqModel, df: DataFrame,
                         idCol: String, vecCol: String,
                         attrCols: Seq[String]): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     require(!model.isEmpty, "cannot encode against an empty model")
     // r16 optimization note: a width-guarded repartition before the
     // encode was TRIED (the Dedup.spreadNarrowScan pattern) and measured
@@ -774,7 +768,6 @@ object Similarity {
    */
   def pqResidualStats(model: PqModel, df: DataFrame,
                       idCol: String, vecCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     require(!model.isEmpty, "cannot measure residuals against an empty model")
     val ds = model.dim / model.books.length
     val enc = df
@@ -943,7 +936,6 @@ object Similarity {
                     fullVectors: DataFrame, idCol: String, vecCol: String,
                     queryPred: Column, k: Int,
                     nProbe: Int = 4, rerankFactor: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.register(index.sparkSession)
     val base = fullVectors
       .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("n", norm2(col("v")))
@@ -1007,7 +999,6 @@ object Similarity {
                               queryId: Long, k: Int,
                               nProbe: Int = 4,
                               rerankFactor: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.register(index.sparkSession)
     def pointRead(pred: Column): DataFrame = fullVectors
       .filter(pred)
       .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
@@ -1088,7 +1079,6 @@ object Similarity {
                           queryIds: DataFrame, k: Int,
                           nProbe: Int = 4,
                           rerankFactor: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.register(index.sparkSession)
     val qids = queryIds
       .select(col(queryIds.columns.head).cast("long").as("qid")).distinct()
     def rangedRead(bounds: Option[(Long, Long)]): DataFrame = {
@@ -1185,7 +1175,6 @@ object Similarity {
                  vecCol: String, queryTokenPred: Column,
                  k: Int): DataFrame = {
     require(k > 0, "maxSimTopK needs positive k")
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
     val base = vectors.select(col(docIdCol).cast("long").as("doc_id"),
         col(vecIdCol).cast("long").as("id"),
         col(vecCol).cast("array<double>").as("v"))
@@ -1224,7 +1213,6 @@ object Similarity {
                         kTok: Int = 50, nProbe: Int = 4,
                         rerankFactor: Int = 4): DataFrame = {
     require(k > 0 && kTok > 0, "maxSimTopKIndexed needs positive k")
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
     val base = vectors.select(col(docIdCol).cast("long").as("doc_id"),
         col(vecIdCol).cast("long").as("id"),
         col(vecCol).cast("array<double>").as("v"))
@@ -1284,7 +1272,6 @@ object Similarity {
                       vecIdCol: String, vecCol: String,
                       queryDocIds: DataFrame, k: Int): DataFrame = {
     require(k > 0, "maxSimTopKBatch needs positive k")
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
     val base = vectors.select(col(docIdCol).cast("long").as("doc_id"),
         col(vecIdCol).cast("long").as("id"),
         col(vecCol).cast("array<double>").as("v"))
@@ -1311,7 +1298,6 @@ object Similarity {
                              kTok: Int = 50, nProbe: Int = 4,
                              rerankFactor: Int = 4): DataFrame = {
     require(k > 0 && kTok > 0, "maxSimTopKIndexedBatch needs positive k")
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
     val base = vectors.select(col(docIdCol).cast("long").as("doc_id"),
         col(vecIdCol).cast("long").as("id"),
         col(vecCol).cast("array<double>").as("v"))
@@ -1529,7 +1515,6 @@ object Similarity {
                        nCentroids: Int = 16, m: Int = 8, kSub: Int = 16,
                        trainIters: Int = 0, pqIters: Int = 1)
       : (PqModel, DataFrame) = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val base = prepVecs(df, idCol, vecCol)
     val model = PqModel(
       trainCentroids(base, resolveNCentroids(base, nCentroids), trainIters),
@@ -1574,7 +1559,6 @@ object Similarity {
   def cosineNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                          tau: Double, leftPred: Column,
                          planes: Int = 6): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val base = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("n", norm2(col("v")))
       .withColumn("bucket", lshSignature(col("v"), planes))
@@ -1598,7 +1582,6 @@ object Similarity {
   def cosineNearDupPairsPortable(df: DataFrame, idCol: String, vecCol: String,
                                  tau: Double, leftPred: Column,
                                  planes: Int = 6): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val base = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("n", norm2(col("v")))
       .withColumn("bucket", portableSignature(col("v"), planes))
@@ -1657,7 +1640,6 @@ object Similarity {
   def semanticDedupWithQuantizer(df: DataFrame, idCol: String, vecCol: String,
                                  cents: Array[(Long, Seq[Double], Double)],
                                  tau: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val assigned = assignTo(cents)(prepVecs(df, idCol, vecCol))
     val dropped = tauNeighbors(assigned, assigned, tau, lowerIdOnly = true)
     withKeepFlag(assigned, dropped)
@@ -1671,7 +1653,6 @@ object Similarity {
     * the one-time cost the amortized ingest path never re-pays. */
   def assignToQuantizer(df: DataFrame, idCol: String, vecCol: String,
                         cents: Array[(Long, Seq[Double], Double)]): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     require(cents.nonEmpty, "cannot assign against an empty quantizer")
     assignTo(cents)(prepVecs(df, idCol, vecCol))
       .select(col("id").as(idCol), col("v").as(vecCol), col("cid"))
@@ -1766,7 +1747,6 @@ object Similarity {
   def trainQuantizer(df: DataFrame, idCol: String, vecCol: String,
                      nCentroids: Int = 16,
                      trainIters: Int = 0): Array[(Long, Seq[Double], Double)] = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val base = prepVecs(df, idCol, vecCol)
     // √n unclamped up to a runaway guard: assignment under this family
     // defaults to the broadcast argmax, which is plan-size-flat — see
@@ -1899,7 +1879,6 @@ object Similarity {
                                        cents: Array[(Long, Seq[Double], Double)],
                                        tau: Double,
                                        broadcastAssign: Boolean = false): DataFrame = {
-    graft.functions.GraftFunctions.register(incoming.sparkSession)
     val corpusA = corpusAssigned
       .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"),
         col("cid"))
@@ -1973,7 +1952,6 @@ object Similarity {
                                      idCol: String, vecCol: String,
                                      cents: Array[(Long, Seq[Double], Double)],
                                      tau: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(incoming.sparkSession)
     // ONE assignment, materialized: the cell-set collect and the screen
     // must observe the SAME batch rows — with two independent
     // evaluations of a non-deterministic or re-read `incoming`, the
@@ -2043,7 +2021,6 @@ object Similarity {
                             prefilterBenchRows: Long = Long.MaxValue,
                             cellProbes: Int = 4,
                             corpusCells: Int = 1): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val c = prepVecs(corpus, idCol, vecCol)
     val pairCos = round(dot(col("v"), col("bv")) / (col("n") * col("bn")), 6)
     def exactPairs(b: DataFrame): DataFrame =

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions
+
 /**
  * Text-analysis operators for large-scale training-data pipelines: token
  * counting, quality scoring, language ID, document fingerprinting.
@@ -186,12 +188,11 @@ object TextAnalysis {
    */
   def contaminationCheck(corpus: DataFrame, benchmark: DataFrame,
                          idCol: String, textCol: String, n: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     // Distinct n-gram fingerprints via the native codegen'd expression:
     // membership only needs hash equality, so the broadcast set and the
     // probe both carry 8-byte longs, never gram strings.
     def grams(t: Column): Column =
-      call_function("graft_ngram_hashes", t, lit(n), lit(true))
+      GraftFunctions.ngramHashes(t, n, distinct = true)
     val bench = benchmark
       .select(explode(grams(col(textCol))).as("gram")).distinct()
       .withColumn("_hit", lit(1))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.functions.GraftFunctions
 import graft.operators.{Dedup, FreqSketch, Importance, Relevance, Similarity, TextAnalysis}
 import graft.sources.VersionedTable
 
@@ -62,13 +63,11 @@ object StreamPipeline {
                           benchmark: DataFrame, benchTextCol: String,
                           n: Int = 3,
                           inlineGramLimit: Int = 0): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val benchGrams: Array[Long] = benchmark
-      .select(explode(call_function("graft_ngram_hashes",
-        col(benchTextCol), lit(n), lit(true))).as("g"))
+      .select(explode(GraftFunctions.ngramHashes(col(benchTextCol), n, distinct = true)).as("g"))
       .distinct().orderBy("g")
       .collect().map(_.getLong(0))
-    val grams = call_function("graft_ngram_hashes", col(textCol), lit(n), lit(true))
+    val grams = GraftFunctions.ngramHashes(col(textCol), n, distinct = true)
     val overlap: Column =
       if (benchGrams.length <= inlineGramLimit)
         size(array_intersect(col("_grams"), typedLit(benchGrams))).cast("long")
@@ -110,7 +109,6 @@ object StreamPipeline {
                            staticTextCol: String,
                            buckets: Int = 1024,
                            minLogRatio: Option[Double] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val w = Importance.bucketWeightArray(raw, target, staticTextCol, buckets)
     val bks = Importance.featBuckets(col(textCol), buckets)
     val scored = docs

@@ -49,7 +49,6 @@ class ImportanceSpec extends SparkSuite {
   }
 
   test("native graft_feat_buckets ≡ ngramFeatures + featBucket (bit parity)") {
-    graft.functions.GraftFunctions.register(spark)
     val texts = (raw.select(col("text")) union target.select(col("text")))
       .union(Seq("x", "", "a  b", "tok1 tok2 tok3 tok4").toDF("text"))
     val hof = texts

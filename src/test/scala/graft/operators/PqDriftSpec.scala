@@ -82,7 +82,6 @@ class PqDriftSpec extends SparkSuite {
       .select(col("mean_residual")).head().getDouble(0)
 
   test("append drift: residual signal fires before planted recall breaks; rebuild recovers") {
-    graft.functions.GraftFunctions.register(spark)
     val build = increment(0L, shift = 0.0)
     val (model, index0) = Similarity.buildPqIndex(build, "vec_id", "embedding",
       nCentroids = 4, m = 2, kSub = 16, trainIters = 2, pqIters = 2)
@@ -150,7 +149,6 @@ class PqDriftSpec extends SparkSuite {
   }
 
   test("managed handle: drifted append rebuilds through the cached path, recall restored") {
-    graft.functions.GraftFunctions.register(spark)
     // the session-lifetime handle (the r11 cache seam): appends consult
     // the staleness signal instead of leaving it to the caller
     val handle = Similarity.managedPqIndex(increment(0L, 0.0),

@@ -188,7 +188,6 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("trainCentroids refines the sampled quantizer and keeps ivf recall") {
-    graft.functions.GraftFunctions.register(spark)
     // 3 well-separated groups of 20 vectors each; centroids start as the
     // 3 lowest ids (all in group 0) and must migrate toward the groups
     val grouped = spark.range(60).select(col("id"),
@@ -216,7 +215,6 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("native graft_dot / graft_lsh_bucket are bit-identical to the HOF forms") {
-    graft.functions.GraftFunctions.register(spark)
     // random-ish 16-dim vectors exercising sign mixes and magnitudes
     val wide = spark.range(64).select(col("id"),
       expr("transform(sequence(0, 15), i -> cast(xxhash64(id, i) as double) / 9.2e18)").as("v"))
@@ -286,7 +284,6 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("prebuilt PQ index: build once, search many — identical to single-call") {
-    graft.functions.GraftFunctions.register(spark)
     val grouped = spark.range(60).select(col("id").as("vec_id"),
       expr("""transform(sequence(0, 7), i ->
         cast(cast(if(i = vec_id % 3, 10.0, 0.0) as double) +
@@ -310,7 +307,6 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("PqModel save/load round-trips bit-for-bit and serves identical searches") {
-    graft.functions.GraftFunctions.register(spark)
     val corpus = spark.range(60).select(col("id").as("vec_id"),
       expr("""transform(sequence(0, 7), i ->
         cast(cast(if(i = vec_id % 3, 10.0, 0.0) as double) +
@@ -348,7 +344,6 @@ class SimilaritySpec extends SparkSuite {
     // 2·dot − ‖cw‖² scores, same (score desc, code asc) tie-break. The
     // fixture plants exact-codeword vectors (forcing score ties against
     // duplicated codewords) plus hash-noise vectors across every cell.
-    graft.functions.GraftFunctions.register(spark)
     val corpus = spark.range(120).select(col("id").as("vec_id"),
       expr("""transform(sequence(0, 15), i ->
         cast(if(vec_id < 8, if(i % 8 = cast(vec_id % 8 as int), 1.0, 0.0),
@@ -374,7 +369,6 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("appendToPqIndex: incremental encode equals encoding everything at once") {
-    graft.functions.GraftFunctions.register(spark)
     val corpus = spark.range(80).select(col("id").as("vec_id"),
       expr("""transform(sequence(0, 7), i ->
         cast(cast(if(i = vec_id % 4, 8.0, 0.0) as double) +
@@ -409,7 +403,6 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("ivfPq codes stay in range and recall holds on planted groups") {
-    graft.functions.GraftFunctions.register(spark)
     // 3 well-separated groups of 20 vectors, 8-dim (2 subspaces × 4 dims)
     val grouped = spark.range(60).select(col("id").as("vec_id"),
       expr("""transform(sequence(0, 7), i ->
@@ -491,7 +484,6 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("broadcast centroid argmax ≡ literal assignment, ties included") {
-    graft.functions.GraftFunctions.register(spark)
     val corpus = spark.range(500).select(col("id").as("vec_id"),
       expr("""transform(sequence(0, 7), i ->
         cast(cast(if(i = vec_id % 8, 5.0, 0.1) as double) +
@@ -517,7 +509,6 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("default assignment auto-switches to broadcast beyond the literal limit") {
-    graft.functions.GraftFunctions.register(spark)
     // 400 rows / 300 cells: above literalCellLimit, so the DEFAULT path
     // (assignToQuantizer → assignTo) must take the broadcast argmax —
     // verified against a driver-side reference argmax with the same
@@ -549,7 +540,6 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("stored semantic ingest: cid-partition pruning, identical decisions") {
-    graft.functions.GraftFunctions.register(spark)
     // 6 well-separated clusters of 15 vectors; batch touches only 2
     val corpus = spark.range(90).select(col("id").as("vec_id"),
       expr("""transform(sequence(0, 7), i ->

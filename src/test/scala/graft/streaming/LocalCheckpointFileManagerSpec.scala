@@ -115,6 +115,12 @@ class LocalCheckpointFileManagerSpec extends SparkSuite {
     val rec = new Recording()
     try {
       batch(0)
+      // A session the GC collects forks `rm -rf` for its artifact
+      // directory (Spark's ArtifactManager cleaner, on the JVM Cleaner
+      // thread). Earlier suites' stopped streams leave such sessions
+      // behind; collect them now so the recording sees only what
+      // batches 2 and 3 start.
+      (1 to 2).foreach { _ => System.gc(); Thread.sleep(500) }
       rec.enable("jdk.ProcessStart")
       rec.start()
       batch(1)
