@@ -40,8 +40,8 @@ object CidStoreBench {
     t0 = System.nanoTime()
     drive(Similarity.semanticDedupIncrementalAssigned(batch,
       Similarity.assignToQuantizerBroadcast(emb, "vec_id", "embedding", cents),
-      "vec_id", "embedding", cents, tau = 0.9, broadcastAssign = true))
-    println(f"[cid] in-plan bc-assigned screen: ${(System.nanoTime() - t0) / 1e9}%.1f s")
+      "vec_id", "embedding", cents, tau = 0.9))
+    println(f"[cid] in-plan assigned screen: ${(System.nanoTime() - t0) / 1e9}%.1f s")
     spark.stop()
   }
 }

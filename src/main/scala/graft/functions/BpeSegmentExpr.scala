@@ -54,9 +54,9 @@ final class BpeSegModel(vocab: Map[String, Seq[String]],
  * merge-chain fallback for out-of-vocabulary words (equivalence with
  * the Catalyst fold pinned in `StreamPipelineSpec`).
  *
- * Exists because big vocabularies must NOT live in the plan (the
- * `typedLit` form's per-batch plan re-serialization tax is superlinear
- * beyond ~10k entries — measured in PLANS.md round 8) and the round-8
+ * Exists because vocabularies must NOT live in the plan (the `typedLit`
+ * form's per-batch plan re-serialization tax lost at every vocab size
+ * measured — PLANS.md rounds 8–9) and the round-8
  * fallback, a Scala UDF, boxed every row through the Catalyst↔Scala
  * converters and split whole-stage codegen at the projection. This
  * expression serializes as the broadcast HANDLE (a few bytes; the model

@@ -9,10 +9,10 @@ import org.apache.spark.sql.types.{DataType, LongType}
 /**
  * Executor-side benchmark n-gram set for streaming decontamination: the
  * benchmark's distinct gram fingerprints, sorted, probed by binary
- * search. Ships to each executor ONCE as a TorrentBroadcast value (the
- * alternative — a `typedLit` array in the plan — re-serializes the whole
- * set into every micro-batch's plan, the same superlinear per-batch tax
- * the BPE segmenter measured and fenced in `SegmentBench`).
+ * search. Ships to each executor ONCE as a TorrentBroadcast value: a
+ * `typedLit` array in the plan would re-serialize the whole set into
+ * every micro-batch's plan, a per-batch tax that lost at every size
+ * measured (PLANS.md round 10).
  *
  * A sorted primitive array beats a hash set here: the set is built once,
  * probed per doc-gram, and stores 8 B/gram with zero boxing — at 1M
@@ -26,9 +26,9 @@ final class GramSet(val sorted: Array[Long]) extends Serializable {
 /**
  * `array<long>` doc grams → count of grams present in the broadcast
  * benchmark set (`bigint`). The doc-gram child is produced with
- * `distinct = true`, so this count equals `size(array_intersect(grams,
- * benchGrams))` — the literal regime's expression — exactly
- * (equivalence pinned in `StreamPipelineSpec`). Serializes as the
+ * `distinct = true`, so this count equals the batch
+ * `TextAnalysis.contaminationCheck` overlap exactly (stream ≡ batch
+ * pinned in `StreamPipelineSpec`). Serializes as the
  * broadcast HANDLE; stays inside whole-stage codegen via a plan
  * reference object, mirroring [[BpeSegmentWordsExpr]].
  *

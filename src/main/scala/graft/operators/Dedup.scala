@@ -1103,7 +1103,6 @@ object Dedup {
     // The pair plan is usually the expensive part (a candidate join); the
     // symmetric-closure union scans it twice. Persist + materialize first so
     // the pair computation runs exactly once.
-    val tEnter = System.nanoTime()
     // localCheckpoint, not persist: persist caches the DATA but leaves the
     // full upstream LOGICAL plan (often an expensive candidate join) in
     // place, and every round's lazy localCheckpoint then re-runs Catalyst
@@ -1114,14 +1113,7 @@ object Dedup {
     val p = pairs.select(col(idA).as("s"), col(idB).as("t"))
       .filter(col("s").isNotNull && col("t").isNotNull)
       .localCheckpoint(false, StorageLevel.DISK_ONLY)
-    if (sys.env.contains("GRAFT_DEBUG_ROUNDS"))
-      System.err.println(
-        f"resolveClusters plan p: ${(System.nanoTime() - tEnter) / 1e9}%.2f s")
-    val tPairs = System.nanoTime()
     val nPairs = p.count()
-    if (sys.env.contains("GRAFT_DEBUG_ROUNDS"))
-      System.err.println(
-        f"resolveClusters pairs: ${(System.nanoTime() - tPairs) / 1e9}%.2f s")
     if (nPairs <= localEdgeThreshold) return resolveClustersLocal(p)
     val spark = pairs.sparkSession
     val nP = edgeShufflePartitions(
@@ -1170,7 +1162,6 @@ object Dedup {
     // would re-shuffle the full edge volume), and hands the label
     // frontier hash(id, nP) partitioning through the rename — round 1
     // starts co-partitioned with the edge table.
-    val tSeed = System.nanoTime()
     var labels = edges.groupBy(col("t")).agg(min(col("s")).as("_mn"))
       .select(col("t").as("id"), least(col("t"), col("_mn")).as("label"))
       .localCheckpoint(false) // lazy: the baseline sum probe materializes it
@@ -1198,14 +1189,9 @@ object Dedup {
     val bcastLabels = nNodes <= broadcastNodeLimit
     def maybeBcast(df: DataFrame): DataFrame =
       if (bcastLabels) broadcast(df) else df
-    if (sys.env.contains("GRAFT_DEBUG_ROUNDS"))
-      System.err.println(
-        f"resolveClusters seed: ${(System.nanoTime() - tSeed) / 1e9}%.2f s " +
-          s"($nNodes nodes, broadcast=$bcastLabels)")
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      val t0 = System.nanoTime()
       // neighbor propagation: s inherits t's label
       val prop = edges.join(maybeBcast(labels), edges("t") === labels("id"))
         .select(edges("s").as("id"), col("label"))
@@ -1232,9 +1218,6 @@ object Dedup {
       converged = s.compareTo(prevSum) == 0
       prevSum = s
       i += 1
-      if (sys.env.contains("GRAFT_DEBUG_ROUNDS"))
-        System.err.println(
-          f"resolveClusters round $i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     if (!converged)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -1243,9 +1226,6 @@ object Dedup {
           "multiple cluster_ids; raise maxIter for deep chain graphs")
     // p/edges are localCheckpoints now — their blocks are reclaimed by the
     // ContextCleaner once the datasets are unreachable; nothing to unpersist
-    if (sys.env.contains("GRAFT_DEBUG_ROUNDS"))
-      System.err.println(
-        f"resolveClusters total: ${(System.nanoTime() - tEnter) / 1e9}%.2f s")
     labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
     } finally spark.conf.set(aqeKey, aqePrev)
     }

@@ -893,18 +893,6 @@ object Similarity {
         nProbe, rerankFactor)
     }
 
-    /** [[search]] for a BATCH of query ids through the distributed
-      * shortlist + broadcast re-rank form ([[searchPqIndexPoints]]) —
-      * the curation-batch shape: no per-query driver round-trip, no
-      * corpus-scale read (r16). Bit-equal to a fold of [[searchPoint]]
-      * over the query set, spec-pinned. */
-    def searchPoints(queryIds: DataFrame, k: Int, nProbe: Int = 4,
-                     rerankFactor: Int = 4): DataFrame = {
-      val (mm, idx, corpus) = synchronized { (modelV, indexV, corpusV) }
-      searchPqIndexPoints(mm, idx, corpus, idCol, vecCol, queryIds, k,
-        nProbe, rerankFactor)
-    }
-
     /** Rebuilds triggered by drift-stale appends (observability/spec). */
     def rebuilds: Int = synchronized(rebuildsV)
 
@@ -1871,29 +1859,17 @@ object Similarity {
    * corpus re-assignment and no quantizer re-derivation per batch: the
    * per-ingest cost is assigning the (small) batch map-side plus the
    * cluster-keyed joins. Store the corpus partitioned/bucketed by `cid`
-   * and the join co-locates too.
+   * and the join co-locates too. The batch is assigned through
+   * `assignTo`, which switches to the broadcast argmax above
+   * `literalCellLimit` cells.
    */
   def semanticDedupIncrementalAssigned(incoming: DataFrame,
                                        corpusAssigned: DataFrame,
                                        idCol: String, vecCol: String,
                                        cents: Array[(Long, Seq[Double], Double)],
-                                       tau: Double,
-                                       broadcastAssign: Boolean = false): DataFrame = {
-    val corpusA = corpusAssigned
-      .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"),
-        col("cid"))
-      .withColumn("n", norm2(col("v")))
-    // broadcastAssign: production cell counts — the literal assignment's
-    // plan size scales with the codebook (see assignToQuantizerBroadcast);
-    // bit-equivalent either way (spec-pinned), gates keep the default
-    val incA =
-      if (broadcastAssign)
-        assignedBatchShape(
-          assignToQuantizerBroadcast(incoming, idCol, vecCol, cents),
-          idCol, vecCol)
-      else assignTo(cents)(prepVecs(incoming, idCol, vecCol))
-    ingestScreen(incA, corpusA, tau)
-  }
+                                       tau: Double): DataFrame =
+    ingestScreen(assignTo(cents)(prepVecs(incoming, idCol, vecCol)),
+      assignedBatchShape(corpusAssigned, idCol, vecCol), tau)
 
   /** (id, v, n, cid) shape from an assigned `(idCol, vecCol, cid)`
     * frame — the internal screen shape. */

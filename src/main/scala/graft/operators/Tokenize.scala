@@ -298,7 +298,6 @@ object Tokenize {
     var cur = seeded.localCheckpoint()
     val merges = Seq.newBuilder[Merge]
     var rank = 1
-    var passes = 0
     var exhausted = false
     while (rank <= k && !exhausted) {
       val top = cur
@@ -323,17 +322,9 @@ object Tokenize {
           folded = mergeOne(folded, lit(l), lit(r))
           rank += 1
         }
-        passes += 1
-        if (sys.env.contains("GRAFT_DEBUG_ROUNDS"))
-          System.err.println(
-            s"learnBpeDistributed pass $passes: ${batch.length} merges " +
-              s"(${rank - 1}/$k)")
         cur = cur.withColumn("toks", folded).localCheckpoint()
       }
     }
-    if (sys.env.contains("GRAFT_DEBUG_ROUNDS"))
-      System.err.println(
-        s"learnBpeDistributed: ${rank - 1} merges in $passes passes")
     BpeModel(merges.result(), cur)
   }
 

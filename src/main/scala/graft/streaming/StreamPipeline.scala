@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -38,47 +38,37 @@ object StreamPipeline {
    * n-gram set. The benchmark is a bounded model input (eval suites are
    * MBs while the corpus is unbounded), so its distinct gram fingerprints
    * are collected ONCE at query-construction time. No stream-static
-   * join, no state; the per-batch plan is a pure projection in either
-   * regime. (Same bounded-collect pattern as the IVF centroid literals —
-   * model parameters may drive to the driver; data never does.)
+   * join, no state; the per-batch plan is a pure projection. (Same
+   * bounded-collect pattern as the IVF centroid literals — model
+   * parameters may drive to the driver; data never does.)
    *
-   * Two regimes, same two-tier design the BPE segmenter measured and
-   * fenced (`SegmentBench` → `bpeSegmentStream`), same verdict
-   * (`DecontamBench`, PLANS.md round 10): the DEFAULT is the broadcast
-   * form for EVERY benchmark size (`inlineGramLimit = 0`) — the sorted
-   * set ships once per executor as a TorrentBroadcast probed by a
-   * codegen'd binary-search expression
+   * The sorted set ships once per executor as a TorrentBroadcast probed
+   * by a codegen'd binary-search expression
    * ([[graft.functions.GramOverlapCountExpr]]), flat ~0.2-0.3 s/batch
-   * from 1k through 500k grams. The literal `array_intersect` form
-   * (`inlineGramLimit >= |grams|`) re-serializes the set into every
-   * micro-batch's plan and LOSES at every size measured — 0.36 s/batch
-   * at 1k grams, 10 s at 500k — so it exists only as the opt-in
-   * zero-broadcast fallback. Regime equivalence is pinned in
-   * `StreamPipelineSpec`.
+   * from 1k through 500k grams. It is not a `typedLit` +
+   * `array_intersect` plan because a literal set is re-serialized into
+   * every micro-batch's plan, which lost at every size measured
+   * (PLANS.md round 10: 0.36 s/batch at 1k grams, 10 s at 500k). An
+   * empty benchmark is an empty set: every overlap is 0. Stream ≡ batch
+   * is pinned in `StreamPipelineSpec`.
    *
    * Emits every input column plus (n_grams, n_contaminated,
    * contamination_frac); filter on the frac downstream to quarantine leaks.
    */
   def decontaminateStream(docs: DataFrame, textCol: String,
                           benchmark: DataFrame, benchTextCol: String,
-                          n: Int = 3,
-                          inlineGramLimit: Int = 0): DataFrame = {
+                          n: Int = 3): DataFrame = {
     val benchGrams: Array[Long] = benchmark
       .select(explode(GraftFunctions.ngramHashes(col(benchTextCol), n, distinct = true)).as("g"))
       .distinct().orderBy("g")
       .collect().map(_.getLong(0))
     val grams = GraftFunctions.ngramHashes(col(textCol), n, distinct = true)
-    val overlap: Column =
-      if (benchGrams.length <= inlineGramLimit)
-        size(array_intersect(col("_grams"), typedLit(benchGrams))).cast("long")
-      else {
-        val setBc = docs.sparkSession.sparkContext
-          .broadcast(new graft.functions.GramSet(benchGrams))
-        org.apache.spark.sql.GraftColumnBridge.column(
-          graft.functions.GramOverlapCountExpr(
-            org.apache.spark.sql.GraftColumnBridge.expression(col("_grams")),
-            setBc))
-      }
+    val setBc = docs.sparkSession.sparkContext
+      .broadcast(new graft.functions.GramSet(benchGrams))
+    val overlap = org.apache.spark.sql.GraftColumnBridge.column(
+      graft.functions.GramOverlapCountExpr(
+        org.apache.spark.sql.GraftColumnBridge.expression(col("_grams")),
+        setBc))
     docs
       .withColumn("_grams", grams)
       .withColumn("n_grams", size(col("_grams")).cast("long"))
@@ -802,65 +792,38 @@ object StreamPipeline {
    * model learned offline by [[graft.operators.Tokenize.learnBpe]] — the
    * ingest-time twin of [[graft.operators.Tokenize.applyBpe]].
    *
-   * The model rides in as literals (the segmented vocab as a map, the
-   * merge rules as the fold chain for unseen words), so the per-batch
-   * plan is a PURE PROJECTION: no stream-static join, no state, no
-   * exchange — each document's words map through the vocab lookup with
-   * the merge-fold fallback, entirely inside whole-stage codegen, in any
-   * output mode. Unlike the batch form (which reassembles per doc after
-   * a posexplode + vocab join), the literal form transforms the word
-   * array in place, so even the reassembly exchange disappears.
+   * The model (segmented vocab map + merge rules) ships to each executor
+   * ONCE for the query's lifetime as a TorrentBroadcast, looked up by the
+   * codegen'd [[graft.functions.BpeSegmentWordsExpr]], whose merge-fold
+   * fallback for unseen words (`Tokenize.segmentWordLocal`) is the exact
+   * twin of the Catalyst fold. The per-batch plan is a PURE PROJECTION:
+   * no stream-static join, no state, no exchange, any output mode. Each
+   * document's word array is transformed in place, so even the batch
+   * form's per-doc reassembly exchange disappears (a stream-static join
+   * form would need watermark state for that reassembly).
    *
-   * The literal-map trade-off: the inlined vocab lives in the PLAN, which
-   * is re-serialized every micro-batch — a measured per-batch tax that
-   * is superlinear in vocab size and, per the round-9 `SegmentBench`
-   * sweep (local[8], 200-doc batches), ALREADY loses at every size
-   * measured: 0.39 s/batch at 1k entries, 0.61 s at 6k, 0.94 s at 10k —
-   * vs a FLAT 0.19 s for the broadcast expression at 1k through 100k.
-   * The default is therefore the codegen'd broadcast form for every
-   * vocab (`inlineVocabLimit = 0`): a TorrentBroadcast of the (vocab
-   * map, merge rules) model shipped to each executor ONCE for the
-   * query's lifetime instead of riding in every batch's plan, looked up
-   * by a segmentation expression whose merge-fold fallback
-   * (`Tokenize.segmentWordLocal`) is the exact twin of the Catalyst
-   * fold. Raising `inlineVocabLimit` opts small vocabs back into the
-   * pure-literal plan (no broadcast machinery — occasionally useful for
-   * plan golden-files). Still stateless, still append-mode-safe — the
-   * stream-static JOIN form of the batch segmenter is NOT available
-   * here because its per-doc reassembly aggregation would demand
-   * watermark state; the broadcast lookup keeps the pure-projection
-   * contract at any vocab size. Both forms are equivalence-pinned in
-   * `StreamPipelineSpec`.
+   * The vocab is not a `typedLit` map because a literal rides in the
+   * plan and is re-serialized every micro-batch, which lost at every
+   * size measured (PLANS.md round 9, local[8], 200-doc batches:
+   * 0.39 s/batch at 1k entries, 0.94 s at 10k, against a flat 0.19 s for
+   * the broadcast form from 1k through 100k). An empty vocab sends every
+   * word through the merge fold.
    *
    * Emits every input column plus (n_words, n_subwords, subword_text) —
    * the same per-doc surface as `applyBpe` (equivalence pinned in
    * `StreamPipelineSpec`).
    */
   def bpeSegmentStream(docs: DataFrame, textCol: String,
-                       model: graft.operators.Tokenize.BpeModel,
-                       inlineVocabLimit: Int = 0): DataFrame = {
+                       model: graft.operators.Tokenize.BpeModel): DataFrame = {
     val vocab: Map[String, Seq[String]] = model.vocab
       .select(col("word"), col("toks")).collect()
       .map(r => r.getString(0) -> r.getSeq[String](1)).toMap
     val words = filter(split(col(textCol), " "), w => w =!= "")
-    val segmented =
-      if (vocab.size <= inlineVocabLimit)
-        transform(words, w =>
-          coalesce(element_at(typedLit(vocab), w),
-            graft.operators.Tokenize.segmentExpr(model, w)))
-      else {
-        // Codegen'd broadcast-backed expression (the r8 Scala-UDF
-        // fallback boxed every row and split whole-stage codegen):
-        // serializes as the broadcast handle, the model — including its
-        // per-executor lazy lookup table — ships once per executor, and
-        // the lookup stays inside the generated projection.
-        val sc = docs.sparkSession.sparkContext
-        val modelBc = sc.broadcast(
-          new graft.functions.BpeSegModel(vocab, model.merges.toIndexedSeq))
-        org.apache.spark.sql.GraftColumnBridge.column(
-          graft.functions.BpeSegmentWordsExpr(
-            org.apache.spark.sql.GraftColumnBridge.expression(words), modelBc))
-      }
+    val modelBc = docs.sparkSession.sparkContext.broadcast(
+      new graft.functions.BpeSegModel(vocab, model.merges.toIndexedSeq))
+    val segmented = org.apache.spark.sql.GraftColumnBridge.column(
+      graft.functions.BpeSegmentWordsExpr(
+        org.apache.spark.sql.GraftColumnBridge.expression(words), modelBc))
     docs
       .withColumn("_segs", segmented)
       .withColumn("n_words", size(words).cast("long"))

@@ -4,7 +4,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.Windows
 
@@ -397,19 +397,6 @@ object StreamWindows {
           fs.delete(new org.apache.hadoop.fs.Path(root, s"v$v"), true))
         }
     }
-
-  /** Convenience: run an AvailableNow pass writing top-N per window into an
-    * in-memory list via the sink callback (tests / bounded replay). State
-    * lives in a fresh temp dir unless `statePath` is given. */
-  def runTopNAvailableNow(counts: DataFrame, partCols: Seq[String],
-                          orderCol: String, tieBreak: String, n: Int,
-                          statePath: String = null)(
-      sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    val path = Option(statePath).getOrElse(
-      java.nio.file.Files.createTempDirectory("graft_topn_state").toString)
-    topNPerWindowStream(counts, partCols, orderCol, tieBreak, n, path)(sink)
-      .trigger(Trigger.AvailableNow()).start()
-  }
 
   /** Per-window bloom-bitmap UV state: fixed-size bitmap + running count —
     * the reference's Redis bitmap (`setbit`/`getbit`,

@@ -6,12 +6,14 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-level guard for two "one way to do it" rules:
+/** Source-level guard for three "one way to do it" rules:
   *  - sessions are built only by [[GraftSession]] (no other session
   *    builder chain in `src/main` or `src/test`);
   *  - library operators build native columns with the typed
   *    `GraftFunctions` constructors, never through the session's function
-  *    registry (`graft_*` SQL names exist for SQL text only). */
+  *    registry (`graft_*` SQL names exist for SQL text only);
+  *  - library code takes parameters, not environment variables (only the
+  *    entry points and `GraftSession` read the environment). */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get(sys.props("user.dir"))
@@ -43,5 +45,13 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(lib.nonEmpty)
     assert(hits(lib, "call_function(\"graft_") === Nil)
     assert(hits(lib, "GraftFunctions.register(") === Nil)
+  }
+
+  test("library code never reads the environment") {
+    val lib = Seq("operators", "streaming", "queries", "functions", "sources",
+      "plans", "model").flatMap(p => scalaFiles(s"src/main/scala/graft/$p"))
+    assert(lib.nonEmpty)
+    assert(hits(lib, "sys.env") === Nil)
+    assert(hits(lib, "System.getenv") === Nil)
   }
 }

@@ -21,49 +21,37 @@ class StreamPipelineSpec extends SparkSuite {
     (4L, "too short"))
 
   test("decontaminateStream ≡ batch contaminationCheck") {
-    val bench = benchDocs.toDF("doc_id", "text")
     val corpus = corpusDocs.toDF("doc_id", "text")
-    val batch = TextAnalysis.contaminationCheck(corpus, bench, "doc_id", "text", 3)
-      .select("doc_id", "n_grams", "n_contaminated", "contamination_frac")
-      .as[(Long, Long, Long, Double)].collect().toSet
+    def check(benchRows: Seq[(Long, String)], name: String): Set[(Long, Long, Long, Double)] = {
+      val bench = benchRows.toDF("doc_id", "text")
+      val batch = TextAnalysis.contaminationCheck(corpus, bench, "doc_id", "text", 3)
+        .select("doc_id", "n_grams", "n_contaminated", "contamination_frac")
+        .as[(Long, Long, Long, Double)].collect().toSet
 
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, String)]
-    val out = StreamPipeline.decontaminateStream(
-      in.toDF().toDF("doc_id", "text"), "text", bench, "text", 3)
-    val q = out.writeStream.format("memory").queryName("decon")
-      .outputMode("append").start()
-    try {
-      in.addData(corpusDocs)
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("decon")
-      .select("doc_id", "n_grams", "n_contaminated", "contamination_frac")
-      .as[(Long, Long, Long, Double)].collect().toSet
+      implicit val sqlCtx = spark.sqlContext
+      val in = MemoryStream[(Long, String)]
+      val out = StreamPipeline.decontaminateStream(
+        in.toDF().toDF("doc_id", "text"), "text", bench, "text", 3)
+      val q = out.writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      try {
+        in.addData(corpusDocs)
+        q.processAllAvailable()
+      } finally q.stop()
+      val streamed = spark.table(name)
+        .select("doc_id", "n_grams", "n_contaminated", "contamination_frac")
+        .as[(Long, Long, Long, Double)].collect().toSet
+      assert(streamed === batch, s"stream ≠ batch for the $name benchmark")
+      batch
+    }
 
+    val batch = check(benchDocs, "decon")
     assert(batch.nonEmpty && batch.exists(_._3 > 0),
       "fixture must contain a contaminated doc")
-    assert(streamed === batch)
-
-    // Regime equivalence: the default is the broadcast binary-search
-    // probe (GramOverlapCountExpr, inlineGramLimit = 0); force the
-    // opt-in literal array_intersect regime — identical verdicts
-    // required.
-    val inBc = MemoryStream[(Long, String)]
-    val outBc = StreamPipeline.decontaminateStream(
-      inBc.toDF().toDF("doc_id", "text"), "text", bench, "text", 3,
-      inlineGramLimit = Int.MaxValue)
-    val qBc = outBc.writeStream.format("memory").queryName("decon_bc")
-      .outputMode("append").start()
-    try {
-      inBc.addData(corpusDocs)
-      qBc.processAllAvailable()
-    } finally qBc.stop()
-    val streamedBc = spark.table("decon_bc")
-      .select("doc_id", "n_grams", "n_contaminated", "contamination_frac")
-      .as[(Long, Long, Long, Double)].collect().toSet
-    assert(streamedBc === batch,
-      "broadcast-probe regime diverged from the literal regime")
+    // an empty benchmark is an empty broadcast set: no overlap anywhere
+    val clean = check(Seq.empty, "decon_empty")
+    assert(clean.map(_._1) === batch.map(_._1) && clean.forall(_._3 == 0L),
+      "an empty benchmark must keep every doc with zero overlap")
   }
 
   test("ruleFilterStream keeps exactly the batch filter's keepers") {
@@ -679,25 +667,26 @@ class StreamPipelineSpec extends SparkSuite {
 
   test("bpeSegmentStream ≡ batch applyBpe, incl. the OOV fold path") {
     import graft.operators.Tokenize
-    val corpus = corpusDocs.toDF("doc_id", "text")
-    val model = Tokenize.learnBpe(
-      Tokenize.wordCounts(corpus, "doc_id", "text"), k = 8)
+    def learn(docs: Seq[(Long, String)]): Tokenize.BpeModel =
+      Tokenize.learnBpe(
+        Tokenize.wordCounts(docs.toDF("doc_id", "text"), "doc_id", "text"), k = 8)
+    val model = learn(corpusDocs)
     // stream docs include words absent from the training vocab ("zzqx"),
-    // so the literal merge-fold fallback executes, not just the map
+    // so the merge-fold fallback executes, not just the vocab
     // lookup — plus an empty and a whitespace-only doc, which BOTH forms
     // must keep as (0, 0, "") rows (ADVICE r7: batch dropped them)
     val streamDocs = corpusDocs ++ Seq(
       (9L, "zzqx alpha unseen beta"), (10L, ""), (11L, "   "))
-    val batch = Tokenize.applyBpe(
-      streamDocs.toDF("doc_id", "text"), model, "doc_id", "text")
-      .select("doc_id", "n_words", "n_subwords", "subword_text")
-      .as[(Long, Long, Long, String)].collect().toSet
+    def batchOf(m: Tokenize.BpeModel): Set[(Long, Long, Long, String)] =
+      Tokenize.applyBpe(streamDocs.toDF("doc_id", "text"), m, "doc_id", "text")
+        .select("doc_id", "n_words", "n_subwords", "subword_text")
+        .as[(Long, Long, Long, String)].collect().toSet
 
-    def streamWith(inlineLimit: Int, name: String): Set[(Long, Long, Long, String)] = {
+    def streamWith(m: Tokenize.BpeModel, name: String): Set[(Long, Long, Long, String)] = {
       implicit val sqlCtx = spark.sqlContext
       val in = MemoryStream[(Long, String)]
       val out = StreamPipeline.bpeSegmentStream(
-        in.toDF().toDF("doc_id", "text"), "text", model, inlineLimit)
+        in.toDF().toDF("doc_id", "text"), "text", m)
       val q = out.writeStream.format("memory").queryName(name)
         .outputMode("append").start()
       try {
@@ -709,17 +698,19 @@ class StreamPipelineSpec extends SparkSuite {
         .as[(Long, Long, Long, String)].collect().toSet
     }
 
-    val streamed = streamWith(50000, "bpeseg")
-    assert(streamed === batch)
+    val streamed = streamWith(model, "bpeseg")
+    assert(streamed === batchOf(model))
     assert(streamed.exists(_._4.contains("z z q x")),
       "the OOV word must fall back to (here unmerged) character subwords")
     assert(streamed.filter(t => t._1 == 10L || t._1 == 11L) ===
       Set((10L, 0L, 0L, ""), (11L, 0L, 0L, "")),
       "wordless docs must survive as (0, 0, \"\") in both forms")
 
-    // vocab > inlineVocabLimit=0 forces the broadcast-lookup fallback —
-    // byte-identical output including the OOV merge-fold twin
-    assert(streamWith(0, "bpeseg_bc") === batch)
+    // a model learned from an empty corpus has an empty vocab and no
+    // merges: every word takes the merge fold and stays split into chars
+    val empty = learn(Seq.empty)
+    assert(empty.merges.isEmpty && empty.vocab.isEmpty)
+    assert(streamWith(empty, "bpeseg_empty") === batchOf(empty))
   }
 
   test("cosineIngestStream: drift-triggered offline rebuild resumes cleanly in a fresh statePath") {
