@@ -2,14 +2,16 @@ package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import graft.queries.Catalog
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Every implemented operator from SURVEY.md §2 (and the training-data
-  * pipeline extensions) is bound here: `queries` maps a name to a DataFrame
-  * builder over a testdata sf directory; `oracleSql` carries the DuckDB
-  * twin the driver hash-compares against. Names present in `queries` but
-  * absent from `oracleSql` get the weaker rows-only check (approximate /
-  * non-SQL-expressible operators only).
+  * pipeline extensions) is one row of [[Catalog.gates]]: a name, a
+  * DataFrame builder over a testdata sf directory and, where the
+  * semantics are SQL-expressible, the DuckDB twin the driver
+  * hash-compares against. `queries` and `oracleSql` are that table as
+  * the two maps the driver reads, built once. Names present in `queries`
+  * but absent from `oracleSql` get the weaker rows-only check
+  * (approximate / non-SQL-expressible operators only).
   */
 object SparkEntry {
 
@@ -21,10 +23,12 @@ object SparkEntry {
     Catalog.hotItems(spark, "/root/testdata/sf0.001")
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Catalog.all
+  /** One entry per gate: name → builder. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Catalog.gates.map(g => g.name -> g.build).toMap
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Catalog.oracles
+  /** For each gate with an oracle, equivalent ANSI SQL runnable by DuckDB
+    * on the same parquet tables. Rows-only gates have no entry. */
+  val oracleSql: Map[String, String] =
+    Catalog.gates.flatMap(g => g.oracle.map(g.name -> _)).toMap
 }

@@ -6,8 +6,13 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // Optional 3rd arg: comma-separated query-name filter (dev iteration).
+    // An unknown name fails here, before the session or the output
+    // directory exists: a typo would otherwise dump nothing and exit 0.
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
+    val unknown = only.getOrElse(Set.empty) -- SparkEntry.queries.keySet
+    require(unknown.isEmpty,
+      s"unknown gate(s) in the filter: ${unknown.toSeq.sorted.mkString(", ")}")
     val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -22,9 +22,8 @@ object PlanBatch {
     val Array(dir, outDir, suffix, list) = args.take(4)
     val spark = graft.GraftSession.local()
     Files.createDirectories(Paths.get(outDir))
-    val registry = graft.SparkEntry.queries ++ SoakAudit.soakQueries
     list.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
-      val df = registry(name)(spark, dir)
+      val df = SoakAudit.registry(name)(spark, dir)
       val txt = df.queryExecution.explainString(
         ExplainMode.fromString("formatted"))
       Files.write(Paths.get(outDir, s"${name}_$suffix.txt"),

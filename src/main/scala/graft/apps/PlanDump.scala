@@ -10,8 +10,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(dir, name) = args.take(2)
     val spark = graft.GraftSession.local()
-    val registry = graft.SparkEntry.queries ++ SoakAudit.soakQueries
-    val df = registry(name)(spark, dir)
+    val df = SoakAudit.registry(name)(spark, dir)
     df.count()
     // executed plan with final AQE decisions
     println(df.queryExecution.executedPlan.toString)

@@ -1,6 +1,6 @@
 package graft.apps
 
-import graft.queries.Catalog
+import graft.SparkEntry
 import graft.sources.Tables
 
 /**
@@ -24,7 +24,7 @@ object Run {
     graft.functions.GraftFunctions.register(spark)
     cmd match {
       case "list" =>
-        Catalog.all.keys.toSeq.sorted.foreach(println)
+        SparkEntry.queries.keys.toSeq.sorted.foreach(println)
       case "sql" =>
         Tables.registerViews(spark, sfDir)
         // declarative entry point gets the automatic sliding-window
@@ -33,7 +33,7 @@ object Run {
         spark.sql(args(2)).show(50, truncate = false)
       case "explain" =>
         val name = args(2)
-        Catalog.all(name)(spark, sfDir).explain("formatted")
+        SparkEntry.queries(name)(spark, sfDir).explain("formatted")
       case "profile" =>
         // one-pass data-quality profile of a registered table, or of
         // every registered table with 'all' / no table argument
@@ -51,16 +51,16 @@ object Run {
         }
       case "time" =>
         val name = args(2)
-        Catalog.all(name)(spark, sfDir).count() // warm: codegen + footers
+        SparkEntry.queries(name)(spark, sfDir).count() // warm: codegen + footers
         val t0 = System.nanoTime()
-        val df = Catalog.all(name)(spark, sfDir)
+        val df = SparkEntry.queries(name)(spark, sfDir)
         val tBuild = System.nanoTime()
         val n = df.count()
         val tEnd = System.nanoTime()
         println(f"$name: $n rows, build ${(tBuild - t0) / 1e9}%.3f s, " +
           f"exec ${(tEnd - tBuild) / 1e9}%.3f s")
-      case name if Catalog.all.contains(name) =>
-        Catalog.all(name)(spark, sfDir).show(20, truncate = false)
+      case name if SparkEntry.queries.contains(name) =>
+        SparkEntry.queries(name)(spark, sfDir).show(20, truncate = false)
       case other =>
         System.err.println(s"unknown query '$other' — try 'list'")
         sys.exit(1)

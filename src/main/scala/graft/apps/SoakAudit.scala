@@ -536,6 +536,13 @@ object SoakAudit {
           org.apache.spark.sql.functions.sum(col("rank_int")).as("mass"))
     }))
 
+  /** Every name the dev tools (SoakAudit, PlanDump, PlanBatch,
+    * StageProfile) resolve: the gates plus the soak drives. Soak names
+    * start with `soak_` and never collide with a gate name (pinned in
+    * PlanInvariantsSpec), so neither side shadows the other. */
+  val registry: Map[String, (SparkSession, String) => DataFrame] =
+    SparkEntry.queries ++ soakQueries
+
   /** Boilerplate-heavy long-tail corpus: every doc opens with one of two
     * 4-token boilerplate headers (df = n/2 each — nonzero idf, so the
     * zero-weight filter cannot drop them) plus 8 content tokens; every
@@ -585,7 +592,6 @@ object SoakAudit {
     spark.range(1000000L).selectExpr("sum(id)").collect() // JIT warmup
 
     println("query\tsec\trows\tshuffles\tbroadcasts")
-    val registry = SparkEntry.queries ++ soakQueries
     names.foreach { name =>
       registry.get(name) match {
         case None => println(s"$name\tUNKNOWN")

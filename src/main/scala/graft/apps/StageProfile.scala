@@ -22,8 +22,7 @@ object StageProfile {
     val Array(dir, name) = args.take(2)
     val reps = args.lift(2).flatMap(_.toIntOption).getOrElse(2)
     val spark = graft.GraftSession.local()
-    val registry = graft.SparkEntry.queries ++ SoakAudit.soakQueries
-    val fn = registry(name)
+    val fn = SoakAudit.registry(name)
     // warmup: codegen, parquet footers, any first-call index persist
     fn(spark, dir).count()
 

@@ -13,9 +13,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
  * struct literal per centroid) carries the WHOLE codebook in the
  * expression tree: plan construction, optimization, and codegen all
  * scale with the cell count, and past a few hundred cells the driver
- * pays minutes of plan work per query (measured in `CidStoreBench` at
- * 1414 cells — the very sizing partition pruning wants). This form is
- * plan-size-flat at any cell count.
+ * pays minutes of plan work per query (PLANS.md's round-10 cid-store
+ * table, at 1414 cells — the very sizing partition pruning wants).
+ * This form is plan-size-flat at any cell count.
  */
 final class CentroidSet(val ids: Array[Long],
                         val vecs: Array[Array[Double]],

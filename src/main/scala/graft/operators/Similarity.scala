@@ -1651,11 +1651,11 @@ object Similarity {
     * bit-equivalent — spec-pinned, ties included). The literal form
     * carries one struct literal PER CENTROID in the expression tree, so
     * plan construction/optimization/codegen scale with the cell count —
-    * measured in `CidStoreBench`: at the √n sizing partition pruning
-    * wants (1414 cells at 2M vectors) the literal path pays minutes of
-    * plan work where this form is flat. Use this for production cell
-    * counts; the oracle gates keep the literal form at their pinned
-    * small sizes. */
+    * measured in PLANS.md's round-10 cid-store table: at the √n sizing
+    * partition pruning wants (1414 cells at 2M vectors) the literal path
+    * pays minutes of plan work where this form is flat. Use this for
+    * production cell counts; the oracle gates keep the literal form at
+    * their pinned small sizes. */
   def assignToQuantizerBroadcast(df: DataFrame, idCol: String, vecCol: String,
                                  cents: Array[(Long, Seq[Double], Double)]): DataFrame = {
     require(cents.nonEmpty, "cannot assign against an empty quantizer")
@@ -1771,12 +1771,13 @@ object Similarity {
     * by the codegen'd [[graft.functions.CentroidArgmaxExpr]] — the
     * literal plan's construction/optimization cost scales with the cell
     * count and pays MINUTES of driver time at the √n sizes partition
-    * pruning wants (1414 cells at 2M vectors, CidStoreBench), where the
-    * broadcast path is flat. 256 is the historical literal clamp — the
-    * largest size the literal regime was ever certified at. Both forms
-    * are bit-equivalent (ties included), spec-pinned through this very
-    * switch. (r11: broadcast became the DEFAULT large-model path; the
-    * two-regime auto-switch is the BPE segmenter pattern.) */
+    * pruning wants (1414 cells at 2M vectors, PLANS.md round-10 cid-store
+    * table), where the broadcast path is flat. 256 is the historical
+    * literal clamp — the largest size the literal regime was ever
+    * certified at. Both forms are bit-equivalent (ties included),
+    * spec-pinned through this very switch. (r11: broadcast became the
+    * DEFAULT large-model path; the two-regime auto-switch is the BPE
+    * segmenter pattern.) */
   private[operators] val literalCellLimit = 256
 
   private def assignTo(cents: Array[(Long, Seq[Double], Double)])(
@@ -1908,8 +1909,8 @@ object Similarity {
                           idCol: String, vecCol: String): Unit =
     // repartition by cid first: a raw partitionBy write emits up to
     // (input partitions × cells) files — 22k for 16×1414 in the first
-    // CidStoreBench run — and the read side then pays per-file open
-    // cost; one shuffle at write time buys one file per cell
+    // round-10 cid-store run (PLANS.md) — and the read side then pays
+    // per-file open cost; one shuffle at write time buys one file per cell
     corpusAssigned.select(col(idCol), col(vecCol), col("cid"))
       .repartition(col("cid"))
       .write.mode("overwrite").partitionBy("cid").parquet(path)

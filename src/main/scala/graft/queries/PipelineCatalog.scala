@@ -3389,227 +3389,4 @@ object PipelineCatalog {
         size(split(col("text"), " ")).cast("long").as("n_tok"))
     RobustStats.robustOutliersApprox(d, "doc_id", Seq("n_chars", "n_tok"))
   }
-
-  // ------------------------------------------------------------------
-  // Registry
-  // ------------------------------------------------------------------
-
-  val all: Map[String, Q] = Map(
-    "quality_outliers" -> qualityOutliersQ,
-    "quality_outliers_approx" -> qualityOutliersApproxQ,
-    "quality_winsorized" -> qualityWinsorizedQ,
-    "quality_winsorized_approx" -> qualityWinsorizedApproxQ,
-    "quality_bins" -> qualityBinsQ,
-    "quality_bins_by_lang" -> qualityBinsByLangQ,
-    "quality_bins_by_lang_approx" -> qualityBinsByLangApproxQ,
-    "quality_winsorized_by_lang" -> qualityWinsorizedByLangQ,
-    "quality_winsorized_by_lang_approx" -> qualityWinsorizedByLangApproxQ,
-    "feature_corr" -> featureCorrQ,
-    "dedup_exact_groups" -> dedupExactGroups,
-    "dedup_exact" -> dedupExact,
-    "dedup_jaccard" -> dedupJaccard,
-    "dedup_containment" -> dedupContainment,
-    "dedup_containment_capped" -> dedupContainmentCapped,
-    "bm25_search" -> bm25SearchQ,
-    "hybrid_search" -> hybridSearchQ,
-    "hybrid_search_indexed" -> hybridSearchIndexedQ,
-    "hybrid_search_ann" -> hybridSearchAnnQ,
-    "hybrid_search_ann_batch" -> hybridSearchAnnBatchQ,
-    "bm25_search_batch" -> bm25SearchBatchQ,
-    "bm25_search_indexed" -> bm25SearchIndexedQ,
-    "bm25_search_appended" -> bm25SearchAppendedQ,
-    "bm25_search_compacted" -> bm25SearchCompactedQ,
-    "text_cosine_pairs" -> textCosinePairsQ,
-    "text_cosine_inc" -> textCosineIncQ,
-    "text_cosine_inc_uncapped" -> textCosineIncUncappedQ,
-    "split_groups" -> splitGroups,
-    "graph_rank" -> graphRank,
-    "fuzzy_pairs" -> fuzzyPairs,
-    "fuzzy_pairs_r2" -> fuzzyPairsR2,
-    "dedup_clusters" -> dedupClusters,
-    "dedup_keep" -> dedupKeep,
-    "dedup_keep_best" -> dedupKeepBest,
-    "dedup_spans" -> dedupSpans,
-    "dedup_spans_inc" -> dedupSpansInc,
-    "dedup_incremental" -> dedupIncremental,
-    "dedup_minhash" -> dedupMinhash,
-    "dedup_minhash_md5" -> dedupMinhashMd5,
-    "dedup_minhash_inc" -> dedupMinhashInc,
-    "dedup_minhash_inc_md5" -> dedupMinhashIncMd5,
-    "dedup_simhash_md5" -> dedupSimhashMd5,
-    "dedup_simhash_inc" -> dedupSimhashInc,
-    "dedup_simhash_inc_md5" -> dedupSimhashIncMd5,
-    "sim_lsh_md5" -> simLshMd5,
-    "dedup_simhash" -> dedupSimhash,
-    "sim_bruteforce_topk" -> simBruteForce,
-    "sim_mmr_rerank" -> simMmrRerankQ,
-    "sim_maxsim" -> simMaxSimQ,
-    "sim_maxsim_indexed" -> simMaxSimIndexedQ,
-    "sim_maxsim_batch" -> simMaxSimBatchQ,
-    "sim_maxsim_indexed_batch" -> simMaxSimIndexedBatchQ,
-    "ann_recall_det" -> annRecallDetQ,
-    "bm25_search_diverse" -> bm25SearchDiverseQ,
-    "sim_lsh_topk" -> simLsh,
-    "sim_ivf_topk" -> simIvf,
-    "sim_filtered_topk" -> simFilteredTopK,
-    "sim_ivf_filtered" -> simIvfFiltered,
-    "sim_ivf_trained" -> simIvfTrained,
-    "sim_ivfpq_topk" -> simIvfPq,
-    "sim_ivfpq_det" -> simIvfPqDet,
-    "sim_ivfpq_points_det" -> simIvfPqPointsDetQ,
-    "sim_ivfpq_filtered_det" -> simIvfPqFilteredDet,
-    "sim_ivfpq_attr_det" -> simIvfPqAttrDet,
-    "sim_ivfpq_search" -> simIvfPqSearch,
-    "sim_ivfpq_append" -> simIvfPqAppend,
-    "sim_near_dup_md5" -> simNearDupMd5,
-    "sim_quantize_int8" -> simQuantize,
-    "rp_project_md5" -> rpProjectMd5,
-    "rp_project" -> rpProject,
-    "sim_near_dup" -> simNearDup,
-    "semantic_dedup" -> semanticDedup,
-    "semantic_dedup_inc" -> semanticDedupInc,
-    "semantic_decontam" -> semanticDecontam,
-    "text_tokens" -> textTokens,
-    "text_quality" -> textQuality,
-    "text_lang_id" -> textLangId,
-    "text_fingerprint" -> textFingerprint,
-    "text_fingerprint_full" -> textFingerprintFull,
-    "text_normalize" -> textNormalize,
-    "text_repetition" -> textRepetition,
-    "text_pii" -> textPii,
-    "text_contamination" -> textContamination,
-    "text_rule_filter" -> textRuleFilter,
-    "text_chunks" -> textChunks,
-    "sample_temperature" -> sampleTemperature,
-    "mix_budget" -> mixBudget,
-    "text_scrub" -> textScrub,
-    "sample_bottomk" -> sampleBottomK,
-    "sample_weighted" -> sampleWeighted,
-    "global_rank" -> globalRankQ,
-    "curriculum_phases" -> curriculumQ,
-    "importance_weights" -> importanceW,
-    "shard_assign" -> shardAssign,
-    "pipeline_e2e" -> pipelineE2e,
-    "table_profile" -> tableProfile,
-    "bm25_top_terms" -> bm25TopTerms,
-    "bm25_top_terms_mindf" -> bm25TopTermsMinDf,
-    "text_lm_ppl" -> textLmPpl,
-    "vocab_top_terms" -> vocabTopTerms,
-    "bpe_merges" -> bpeMerges,
-    "bpe_tokens" -> bpeTokens,
-    "bpe_vocab" -> bpeVocab,
-    "vocab_sketch" -> vocabSketch,
-    "seq_packing" -> seqPacking,
-    "sample_det" -> sampleDet,
-    "sample_stratified" -> sampleStratified,
-    "mm_payload_stats" -> mmPayloadStats,
-    "mm_audit" -> mmAudit,
-    "mm_features" -> mmFeatures)
-
-  val oracles: Map[String, String] = Map(
-    "quality_outliers" -> qualityOutliersSql,
-    // quality_outliers_approx: sketch medians — rows-only by design
-    "quality_winsorized" -> qualityWinsorizedSql,
-    // quality_winsorized_approx: sketch cut points — rows-only by design
-    "quality_bins" -> qualityBinsSql,
-    "quality_bins_by_lang" -> qualityBinsByLangSql,
-    // quality_bins_by_lang_approx / quality_winsorized_by_lang_approx:
-    // sketch cut points — rows-only by design, exact twins certify
-    "quality_winsorized_by_lang" -> qualityWinsorizedByLangSql,
-    "feature_corr" -> featureCorrSql,
-    "dedup_exact_groups" -> dedupExactGroupsSql,
-    "dedup_exact" -> dedupExactSql,
-    "dedup_jaccard" -> dedupJaccardSql,
-    "dedup_containment" -> dedupContainmentSql,
-    "dedup_containment_capped" -> dedupContainmentCappedSql,
-    "bm25_search" -> bm25SearchSql,
-    "hybrid_search" -> hybridSearchSql,
-    "hybrid_search_indexed" -> hybridSearchSql,
-    "hybrid_search_ann" -> hybridSearchAnnSql,
-    "hybrid_search_ann_batch" -> hybridSearchAnnBatchSql,
-    "bm25_search_batch" -> bm25SearchBatchSql,
-    "bm25_search_indexed" -> bm25SearchSql,
-    "bm25_search_appended" -> bm25SearchSql,
-    "bm25_search_compacted" -> bm25SearchSql,
-    "text_cosine_pairs" -> textCosinePairsSql,
-    "text_cosine_inc" -> textCosineIncSql,
-    "text_cosine_inc_uncapped" -> textCosineIncUncappedSql,
-    "split_groups" -> splitGroupsSql,
-    "graph_rank" -> graphRankSql,
-    "fuzzy_pairs" -> fuzzyPairsSql,
-    "fuzzy_pairs_r2" -> fuzzyPairsR2Sql,
-    "dedup_minhash_md5" -> dedupMinhashMd5Sql,
-    "dedup_minhash_inc_md5" -> dedupMinhashIncMd5Sql,
-    "dedup_simhash_md5" -> dedupSimhashMd5Sql,
-    "dedup_simhash_inc_md5" -> dedupSimhashIncMd5Sql,
-    "dedup_clusters" -> dedupClustersSql,
-    "dedup_keep" -> dedupKeepSql,
-    "dedup_keep_best" -> dedupKeepBestSql,
-    "dedup_spans" -> dedupSpansSql,
-    "dedup_spans_inc" -> dedupSpansIncSql,
-    "dedup_incremental" -> dedupIncrementalSql,
-    "sim_bruteforce_topk" -> simBruteForceSql,
-    "sim_mmr_rerank" -> simMmrRerankSql,
-    "sim_maxsim" -> simMaxSimSql,
-    // the full-coverage indexed configuration must reproduce the exact
-    // MaxSim bit for bit — the oracle is shared VERBATIM by construction
-    "sim_maxsim_indexed" -> simMaxSimSql,
-    "sim_maxsim_batch" -> simMaxSimBatchSql,
-    // full coverage ⇒ the indexed batch must reproduce the exact batch
-    // bit for bit — the transform oracle is shared VERBATIM
-    "sim_maxsim_indexed_batch" -> simMaxSimBatchSql,
-    "ann_recall_det" -> annRecallDetSql,
-    "bm25_search_diverse" -> bm25SearchDiverseSql,
-    "sim_ivf_topk" -> simIvfSql,
-    "sim_filtered_topk" -> simFilteredTopKSql,
-    "sim_ivf_filtered" -> simIvfFilteredSql,
-    "rp_project_md5" -> rpProjectMd5Sql,
-    "sim_lsh_md5" -> simLshMd5Sql,
-    "sim_ivfpq_det" -> simIvfPqDetSql,
-    // the batch point query must reproduce the single-batch det search
-    // bit for bit — the oracle is shared VERBATIM by construction
-    "sim_ivfpq_points_det" -> simIvfPqDetSql,
-    "sim_ivfpq_filtered_det" -> simIvfPqFilteredDetSql,
-    "sim_ivfpq_attr_det" -> simIvfPqFilteredDetSql,
-    "sim_near_dup_md5" -> simNearDupMd5Sql,
-    "semantic_dedup" -> semanticDedupSql,
-    "semantic_dedup_inc" -> semanticDedupIncSql,
-    "semantic_decontam" -> semanticDecontamSql,
-    "sim_quantize_int8" -> simQuantizeSql,
-    "text_tokens" -> textTokensSql,
-    "text_quality" -> textQualitySql,
-    "text_lang_id" -> textLangIdSql,
-    "text_fingerprint" -> textFingerprintSql,
-    "text_fingerprint_full" -> textFingerprintFullSql,
-    "text_normalize" -> textNormalizeSql,
-    "text_repetition" -> textRepetitionSql,
-    "text_pii" -> textPiiSql,
-    "text_contamination" -> textContaminationSql,
-    "text_rule_filter" -> textRuleFilterSql,
-    "text_chunks" -> textChunksSql,
-    "sample_temperature" -> sampleTemperatureSql,
-    "mix_budget" -> mixBudgetSql,
-    "text_scrub" -> textScrubSql,
-    "sample_bottomk" -> sampleBottomKSql,
-    "sample_weighted" -> sampleWeightedSql,
-    "global_rank" -> globalRankSql,
-    "curriculum_phases" -> curriculumSql,
-    "importance_weights" -> importanceWSql,
-    "shard_assign" -> shardAssignSql,
-    "pipeline_e2e" -> pipelineE2eSql,
-    "table_profile" -> tableProfileSql,
-    "bm25_top_terms" -> bm25TopTermsSql,
-    "bm25_top_terms_mindf" -> bm25TopTermsMinDfSql,
-    "text_lm_ppl" -> textLmPplSql,
-    "vocab_top_terms" -> vocabTopTermsSql,
-    "bpe_merges" -> bpeMergesSql,
-    "bpe_tokens" -> bpeTokensSql,
-    "bpe_vocab" -> bpeVocabSql,
-    "seq_packing" -> seqPackingSql,
-    "sample_det" -> sampleDetSql,
-    "sample_stratified" -> sampleStratifiedSql,
-    "mm_payload_stats" -> mmPayloadStatsSql,
-    "mm_audit" -> mmAuditSql,
-    "mm_features" -> mmFeaturesSql,
-    "vocab_sketch" -> vocabSketchSql)
 }

@@ -2,7 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.DataFrame
 
-import graft.SparkSuite
+import graft.{SparkEntry, SparkSuite}
+import graft.apps.SoakAudit
 
 /** PLANS.md's invariants, enforced: the physical-plan properties the
   * 100 TB design depends on are asserted here so a regression (a lost
@@ -15,7 +16,7 @@ class PlanInvariantsSpec extends SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private def plan(name: String): String = {
-    val df: DataFrame = Catalog.all(name)(spark, dir)
+    val df: DataFrame = SparkEntry.queries(name)(spark, dir)
     df.queryExecution.executedPlan.toString
   }
 
@@ -54,7 +55,7 @@ class PlanInvariantsSpec extends SparkSuite {
 
   test("q6 predicates reach the parquet scan as pushed filters") {
     // toString truncates the filter list — use the formatted explain
-    val p = Catalog.all("q6_filter")(spark, dir).queryExecution
+    val p = SparkEntry.queries("q6_filter")(spark, dir).queryExecution
       .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     assert(p.contains("PushedFilters: [IsNotNull"), s"q6 lost its pushdown:\n$p")
     assert(p.contains("GreaterThanOrEqual(l_discount,0.05)"),
@@ -125,13 +126,31 @@ class PlanInvariantsSpec extends SparkSuite {
       "q21 must top-k via TakeOrdered, not a global sort")
   }
 
-  test("registry consistency: every oracle has a query; names well-formed") {
-    val qs = Catalog.all.keySet
-    val os = Catalog.oracles.keySet
-    assert((os -- qs).isEmpty,
-      s"oracle entries without a query binding: ${os -- qs}")
-    val badNames = qs.filterNot(_.matches("[a-z0-9_]+"))
-    assert(badNames.isEmpty, s"non-snake-case query names: $badNames")
+  test("gate table: unique snake_case names, pinned rows-only set") {
+    // a repeated row would be shadowed silently by the maps' toMap
+    val names = Catalog.gates.map(_.name)
+    val repeated = names.diff(names.distinct)
+    assert(repeated.isEmpty, s"gate names registered twice: $repeated")
+    assert(names.size === 178)
+    val badNames = names.filterNot(_.matches("[a-z0-9_]+"))
+    assert(badNames.isEmpty, s"non-snake-case gate names: $badNames")
+    // an oracle lost from a row must fail here, not quietly turn its
+    // gate into a rows-only one
+    val rowsOnly = Catalog.gates.filter(_.oracle.isEmpty).map(_.name).toSet
+    assert(rowsOnly === Set(
+      "dedup_minhash", "dedup_minhash_inc", "dedup_simhash",
+      "dedup_simhash_inc", "quality_bins_by_lang_approx",
+      "quality_outliers_approx", "quality_winsorized_approx",
+      "quality_winsorized_by_lang_approx", "rp_project", "sim_ivf_trained",
+      "sim_ivfpq_append", "sim_ivfpq_search", "sim_ivfpq_topk",
+      "sim_lsh_topk", "sim_near_dup", "uv_approx", "uv_sketch_daily",
+      "value_percentiles_approx"))
+    // the dev tools resolve gates ++ soaks: a soak must never shadow a gate
+    val soaks = SoakAudit.soakQueries.keySet
+    assert(soaks.forall(_.startsWith("soak_")),
+      s"soak names without the soak_ prefix: ${soaks.filterNot(_.startsWith("soak_"))}")
+    assert((soaks intersect names.toSet).isEmpty,
+      s"soak names that shadow a gate: ${soaks intersect names.toSet}")
   }
 
   test("naive declarative sliding window gets the slice rollup automatically") {
@@ -139,7 +158,7 @@ class PlanInvariantsSpec extends SparkSuite {
     // SliceRollupRule must split the aggregation into partial-by-slice +
     // final-by-window (2 logical Aggregates) instead of the 12×-replicating
     // single-level plan (1).
-    val df = Catalog.all("hot_items_sql_auto")(spark, dir)
+    val df = SparkEntry.queries("hot_items_sql_auto")(spark, dir)
     val aggs = df.queryExecution.optimizedPlan.collect {
       case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
     }.length
