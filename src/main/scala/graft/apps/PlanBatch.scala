@@ -16,6 +16,9 @@ import org.apache.spark.sql.execution.ExplainMode
   * initial plan (AQE isFinalPlan=false) with scan details — PushedFilters
   * and ReadSchema — which is what the deliverable asks for; PlanDump
   * remains the executed-plan (final AQE) companion.
+  *
+  * Session counters are renumbered per dump ([[renumber]]), so a plain
+  * `diff` of two builds' dumps of the same gate shows plan changes only.
   */
 object PlanBatch {
   def main(args: Array[String]): Unit = {
@@ -24,12 +27,22 @@ object PlanBatch {
     Files.createDirectories(Paths.get(outDir))
     list.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
       val df = SoakAudit.registry(name)(spark, dir)
-      val txt = df.queryExecution.explainString(
-        ExplainMode.fromString("formatted"))
+      val txt = renumber(df.queryExecution.explainString(
+        ExplainMode.fromString("formatted")))
       Files.write(Paths.get(outDir, s"${name}_$suffix.txt"),
         txt.getBytes("UTF-8"))
       println(s"wrote $outDir/${name}_$suffix.txt (${txt.length} chars)")
     }
     spark.stop()
+  }
+
+  private val counters = """(#|plan_id=|RDD\[)(\d+)""".r
+
+  /** Each session-global counter — expression id `#N`, `plan_id=N`,
+    * `RDD[N]` — replaced by its order of first appearance, per kind. */
+  def renumber(plan: String): String = {
+    val seen = scala.collection.mutable.Map.empty[(String, String), Int]
+    counters.replaceAllIn(plan, m => m.group(1) + seen.getOrElseUpdate(
+      (m.group(1), m.group(2)), seen.keys.count(_._1 == m.group(1))))
   }
 }

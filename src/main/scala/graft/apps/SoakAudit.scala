@@ -26,19 +26,26 @@ import graft.sources.Tables
 object SoakAudit {
 
   /** Total (shuffles, broadcasts, actions) summed over the EXECUTED plan
-    * of every action `f` triggers — captured via QueryExecutionListener,
-    * so AQE's FINAL plans are measured (runtime broadcast demotions and
-    * stage re-plans included; a pre-execution `df.queryExecution
-    * .executedPlan` read shows only the initial adaptive plan). Listener
-    * bus is drained before the counts are read. Shared by the per-round
+    * of every action `f` triggers ([[executedPlans]]), so AQE's FINAL
+    * plans are measured (runtime broadcast demotions and stage re-plans
+    * included; a pre-execution `df.queryExecution.executedPlan` read
+    * shows only the initial adaptive plan). Shared by the per-round
     * soaks and `PlanScaleInvariantsSpec`. */
   def actionShapes(spark: SparkSession)(f: => Unit): (Int, Int, Int) = {
-    val shapes = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+    val shapes = executedPlans(spark)(f).map(countExchanges)
+    (shapes.map(_._1).sum, shapes.map(_._2).sum, shapes.length)
+  }
+
+  /** The executed plan of every action `f` triggers, in completion
+    * order — captured via QueryExecutionListener, with the listener bus
+    * drained before they are read. */
+  def executedPlans(spark: SparkSession)(f: => Unit): Seq[SparkPlan] = {
+    val plans = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              durationNs: Long): Unit =
-        shapes.synchronized { shapes += countExchanges(qe.executedPlan); () }
+        plans.synchronized { plans += qe.executedPlan; () }
       override def onFailure(funcName: String,
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              exception: Exception): Unit = ()
@@ -46,9 +53,7 @@ object SoakAudit {
     spark.listenerManager.register(listener)
     try { f; org.apache.spark.GraftListenerBridge.waitListenerBus(spark.sparkContext) }
     finally spark.listenerManager.unregister(listener)
-    shapes.synchronized {
-      (shapes.map(_._1).sum, shapes.map(_._2).sum, shapes.length)
-    }
+    plans.synchronized(plans.toList)
   }
 
   def countExchanges(plan: SparkPlan): (Int, Int) = {

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
  * Bit-parity contracts (test-pinned in `SimilaritySpec`):
  *  - `dot` folds strictly in array order, exactly like `aggregate`'s
  *    sequential fold, so scores are bit-identical to the declarative form.
- *  - `lshBucket` reproduces `Similarity.lshSignature`'s plane components:
+ *  - `lshBucket` reproduces the declarative signature's plane components:
  *    component(p, i) = xxhash64(p, i) / Long.MaxValue, where Spark's
  *    two-argument xxhash64 seed-chains (hash p with seed 42, then i with
  *    that hash) — replicated here via XXH64.hashInt.
@@ -63,7 +63,7 @@ object VectorOps {
   }
 
   /** `planes`-bit random-hyperplane bucket of a double array — bit-identical
-    * to the declarative `Similarity.lshSignature`. */
+    * to the declarative signature `SimilaritySpec` keeps as reference. */
   def lshBucket(v: ArrayData, planes: Int): Long = {
     val n = v.numElements()
     var sig = 0L

@@ -110,6 +110,22 @@ object Dedup {
       array_min(transform(hs, h => xxhash64(h, lit(seed))))
     }: _*)
 
+  /** Batch-source width guard (r16, guide §2.5 input skew): a small
+    * parquet corpus is ONE scan partition, and a signature pass over it
+    * (the dedup families' dominant CPU) then runs on one core. When the
+    * scan has fewer partitions than the session width, redistribute the
+    * (id, text) rows by id once — at real corpus scale the scan is
+    * already wide and this is the identity. Batch-only by contract
+    * (`.rdd` — callers never pass streaming frames; the incremental
+    * STREAM screens live in StreamPipeline and pre-batch their input).
+    */
+  private def spreadNarrowScan(df: DataFrame, idCol: String): DataFrame = {
+    val n = df.sparkSession.sessionState.conf.numShufflePartitions
+    if (!df.isStreaming && df.rdd.getNumPartitions < n)
+      df.repartition(n, col(idCol))
+    else df
+  }
+
   /**
    * MinHash + LSH candidate pairs: signature of `bands * rowsPerBand`
    * hashes; docs agreeing on all rows of any band become a candidate pair;
@@ -127,69 +143,11 @@ object Dedup {
    * (fingerprint, id, signature) — signatures are computed map-side before
    * it, so document bodies never enter a wide exchange anywhere.
    */
-  /** Batch-source width guard (r16, guide §2.5 input skew): a small
-    * parquet corpus is ONE scan partition, and a signature pass over it
-    * (the dedup families' dominant CPU) then runs on one core. When the
-    * scan has fewer partitions than the session width, redistribute the
-    * (id, text) rows by id once — at real corpus scale the scan is
-    * already wide and this is the identity. Batch-only by contract
-    * (`.rdd` — callers never pass streaming frames; the incremental
-    * STREAM screens live in StreamPipeline and pre-batch their input).
-    */
-  private def spreadNarrowScan(df: DataFrame, idCol: String): DataFrame = {
-    val n = df.sparkSession.sessionState.conf.numShufflePartitions
-    if (!df.isStreaming && df.rdd.getNumPartitions < n)
-      df.repartition(n, col(idCol))
-    else df
-  }
-
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       k: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
-                      tau: Double = 0.7): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    val docs = df.select(col(idCol).as("id"), col(textCol).as("text"))
-    // Signature via the native codegen'd expression (one content hash per
-    // shingle + numHashes long hashes, tight loop) — the higher-order
-    // function pipeline is CodegenFallback and ~20× slower per doc.
-    // Lazy localCheckpoint + spread (r16): hashed feeds the keeper
-    // aggregate AND the tagged join — without the checkpoint each
-    // consumer re-runs the signature pass as its own subtree, on the
-    // single scan partition of a small corpus file. The verify text
-    // joins below keep reading the plain scan (no signature work there).
-    val hashed = spreadNarrowScan(docs, "id")
-      .withColumn("sig", GraftFunctions.minhashSignature(col("text"), k, numHashes))
-      .withColumn("fp", md5(col("text")))
-      .select(col("id"), col("fp"), col("sig"))
-      .localCheckpoint(false)
-    val keepers = hashed.groupBy(col("fp")).agg(min(col("id")).as("keeper"))
-    val tagged = hashed.join(keepers, "fp")
-    val dupPairs = tagged.filter(col("id") =!= col("keeper"))
-      .select(col("keeper").as("id_a"), col("id").as("id_b"),
-        lit(1.0).as("jaccard"))
-    val sigs = tagged.filter(col("id") === col("keeper"))
-      .select(col("id"), col("sig"))
-    // Candidate generation ships (id, band, band_hash) ONLY — at corpus
-    // scale the 8× banded explode and the self-join shuffle never carry
-    // document bodies; text re-joins for the (small) candidate set below.
-    val banded = bandedRows(sigs, bands, rowsPerBand, portable = false)
-    val cand = banded.alias("a").join(banded.alias("b"),
-        col("a.band") === col("b.band") &&
-          col("a.band_key") === col("b.band_key") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    val keeperPairs = cand
-      .join(docs.select(col("id").as("id_a"), col("text").as("text_a")), Seq("id_a"))
-      .join(docs.select(col("id").as("id_b"), col("text").as("text_b")), Seq("id_b"))
-      .withColumn("sh_a", shingles(col("text_a"), k))
-      .withColumn("sh_b", shingles(col("text_b"), k))
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
-      .filter(col("jaccard") >= tau)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-    keeperPairs.unionByName(dupPairs)
-  }
+                      tau: Double = 0.7): DataFrame =
+    minhashBatchCore(df, idCol, textCol, k, bands, rowsPerBand, tau,
+      portable = false)
 
   /**
    * Engine-portable MinHash + LSH variant: per-permutation hash =
@@ -211,13 +169,35 @@ object Dedup {
    * concat_ws and DuckDB's array_to_string disagree on null handling),
    * and such pairs are dropped by the verify step (null jaccard).
    */
+  def minhashLshPairsPortable(df: DataFrame, idCol: String, textCol: String,
+                              k: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
+                              tau: Double = 0.7): DataFrame =
+    minhashBatchCore(df, idCol, textCol, k, bands, rowsPerBand, tau,
+      portable = true)
+
+  /** `text`'s signature in the native or `portable` family. The native
+    * codegen'd expression is ~20× faster per doc than the HOF pipeline. */
+  private def minhashSig(portable: Boolean, k: Int, numHashes: Int)(
+      text: Column): Column =
+    if (portable) portableSigExpr(text, k, numHashes)
+    else GraftFunctions.minhashSignature(text, k, numHashes)
+
   /** md5-family signature expression shared by the portable batch,
     * store, and incremental forms (ONE definition — the oracle SQL
     * reproduces exactly this arithmetic): per permutation p, the
     * signature row is the lexicographic minimum over shingles of the
     * lower-64-bit hex of `md5(shingle + "#" + p)`, '' for shingle-less
-    * docs. Families-inner single pass — see the plan note at the batch
-    * call site. */
+    * docs.
+    *
+    * Families-inner single pass: an outer families × inner shingles
+    * nesting would re-evaluate the whole shingle-array construction
+    * (split + slice + concat_ws) once PER FAMILY — projecting the array
+    * out first doesn't help, CollapseProject inlines a once-referenced
+    * alias straight back into the lambda. The fold below references the
+    * shingle expression exactly once and evaluates it once per row:
+    * acc[i] = min over shingles of family-i's hex hash, with a sentinel
+    * above every hex string standing in for "empty" (→ '' like the
+    * coalesce in the oracle SQL). Measured 4× on the sf0.1 gate. */
   private def portableSigExpr(text: Column, k: Int, numHashes: Int): Column = {
     val sentinel = "￿"
     transform(
@@ -230,49 +210,66 @@ object Dedup {
       x => when(x === lit(sentinel), lit("")).otherwise(x))
   }
 
-  def minhashLshPairsPortable(df: DataFrame, idCol: String, textCol: String,
-                              k: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
-                              tau: Double = 0.7): DataFrame = {
-    val numHashes = bands * rowsPerBand
+  /** The one body of [[minhashLshPairs]] and [[minhashLshPairsPortable]],
+    * which differ only in the signature family. */
+  private def minhashBatchCore(df: DataFrame, idCol: String, textCol: String,
+                               k: Int, bands: Int, rowsPerBand: Int,
+                               tau: Double, portable: Boolean): DataFrame = {
     val docs = df.select(col(idCol).as("id"), col(textCol).as("text"))
-    // Families-inner single pass: an outer families × inner shingles
-    // nesting would re-evaluate the whole shingle-array construction
-    // (split + slice + concat_ws) once PER FAMILY — projecting the array
-    // out first doesn't help, CollapseProject inlines a once-referenced
-    // alias straight back into the lambda. The fold below references the
-    // shingle expression exactly once and evaluates it once per row:
-    // acc[i] = min over shingles of family-i's hex hash, with a sentinel
-    // above every hex string standing in for "empty" (→ '' like the
-    // coalesce in the oracle SQL). Measured 4× on the sf0.1 gate.
-    // Lazy localCheckpoint + spread (r16): the 8-md5-rounds-per-shingle
-    // signature pass was running TWICE (keeper agg + tagged join), each
-    // time on the single scan partition of the small corpus file —
-    // measured as two ~2 s single-task stages of the 5 s sf0.1 gate.
-    // The verify text joins keep the plain scan (no signature work).
-    val hashed = spreadNarrowScan(docs, "id")
-      .withColumn("sig", portableSigExpr(col("text"), k, numHashes))
-      .withColumn("fp", md5(col("text")))
-      .select(col("id"), col("fp"), col("sig"))
+    // Lazy localCheckpoint + spread (r16): hashed feeds the keeper
+    // aggregate AND the tagged join — without the checkpoint each
+    // consumer re-runs the signature pass as its own subtree, on the
+    // single scan partition of a small corpus file (the md5 family's
+    // pass measured as two ~2 s single-task stages of the 5 s sf0.1
+    // gate). The verify text joins below keep reading the plain scan
+    // (no signature work there).
+    val hashed = signDocs(spreadNarrowScan(docs, "id"),
+        minhashSig(portable, k, bands * rowsPerBand))
       .localCheckpoint(false)
-    // mega-bucket guard (see minhashLshPairs): band keepers only, emit
-    // exact duplicates as a linear (keeper, dup, 1.0) star
+    val (dupPairs, sigs) = keeperStar(hashed, lit(1.0).as("jaccard"))
+    // Candidate generation ships (id, band, band_key) ONLY — at corpus
+    // scale the 8× banded explode and the self-join shuffle never carry
+    // document bodies; text re-joins for the (small) candidate set below.
+    val banded = bandedRows(sigs, bands, rowsPerBand, portable)
+    val cand = bandPairs(banded.alias("a"), banded.alias("b"))
+      .dropDuplicates("id_a", "id_b")
+    val keeperPairs = jaccardVerified(cand
+      .join(docs.select(col("id").as("id_a"), col("text").as("text_a")), Seq("id_a"))
+      .join(docs.select(col("id").as("id_b"), col("text").as("text_b")), Seq("id_b")),
+      k, tau)
+    keeperPairs.unionByName(dupPairs)
+  }
+
+  /** Mega-bucket guard of the batch pair operators: the (keeper, dup,
+    * `same`) star of `hashed`'s exact duplicates, and the min-id
+    * keepers' (id, signature columns…) rows — the only rows banded. */
+  private def keeperStar(hashed: DataFrame,
+                         same: Column): (DataFrame, DataFrame) = {
     val keepers = hashed.groupBy(col("fp")).agg(min(col("id")).as("keeper"))
     val tagged = hashed.join(keepers, "fp")
     val dupPairs = tagged.filter(col("id") =!= col("keeper"))
-      .select(col("keeper").as("id_a"), col("id").as("id_b"),
-        lit(1.0).as("jaccard"))
+      .select(col("keeper").as("id_a"), col("id").as("id_b"), same)
     val sigs = tagged.filter(col("id") === col("keeper"))
-      .select(col("id"), col("sig"))
-    val banded = bandedRows(sigs, bands, rowsPerBand, portable = true)
-    val cand = banded.alias("a").join(banded.alias("b"),
+      .select(col("id") +: sigColumns(hashed).map(col): _*)
+    (dupPairs, sigs)
+  }
+
+  /** The signature columns of a hashed or store frame: all but id, fp. */
+  private def sigColumns(hashed: DataFrame): Seq[String] =
+    hashed.columns.toSeq.filterNot(c => c == "id" || c == "fp")
+
+  /** (id_a < id_b) pairs of `a`/`b`-aliased band rows sharing a key. */
+  private def bandPairs(a: DataFrame, b: DataFrame): DataFrame =
+    a.join(b,
         col("a.band") === col("b.band") &&
           col("a.band_key") === col("b.band_key") &&
           col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    val keeperPairs = cand
-      .join(docs.select(col("id").as("id_a"), col("text").as("text_a")), Seq("id_a"))
-      .join(docs.select(col("id").as("id_b"), col("text").as("text_b")), Seq("id_b"))
+
+  /** (id_a, id_b, jaccard) of the (…, text_a, text_b) pairs ≥ `tau`. */
+  private def jaccardVerified(pairs: DataFrame, k: Int,
+                              tau: Double): DataFrame =
+    pairs
       .withColumn("sh_a", shingles(col("text_a"), k))
       .withColumn("sh_b", shingles(col("text_b"), k))
       .withColumn("jaccard",
@@ -280,8 +277,6 @@ object Dedup {
           size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
       .filter(col("jaccard") >= tau)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-    keeperPairs.unionByName(dupPairs)
-  }
 
   // ---------------------------------------------------------------------
   // Incremental MinHash near-dedup — the daily-ingest path: screen a NEW
@@ -316,16 +311,23 @@ object Dedup {
   /** (id, fp, sig) rows for `df` under the given signature family. */
   private def hashedDocs(df: DataFrame, idCol: String, textCol: String,
                          sigOf: Column => Column): DataFrame =
-    df.select(col(idCol).as("id"), col(textCol).as("text"))
-      .withColumn("sig", sigOf(col("text")))
+    signDocs(df.select(col(idCol).as("id"), col(textCol).as("text")), sigOf)
+
+  /** (id, fp, sig) rows from (id, text) rows. */
+  private def signDocs(docs: DataFrame, sigOf: Column => Column): DataFrame =
+    docs.withColumn("sig", sigOf(col("text")))
       .withColumn("fp", md5(col("text")))
       .select(col("id"), col("fp"), col("sig"))
 
-  /** One keeper (min id) per distinct fp, carrying that row's sig. */
-  private def keeperStore(hashed: DataFrame): DataFrame =
+  /** One keeper (min id) per distinct fp, carrying that row's signature
+    * columns ([[sigColumns]]). */
+  private def keeperStore(hashed: DataFrame): DataFrame = {
+    val sigs = sigColumns(hashed)
     hashed.groupBy(col("fp"))
-      .agg(min(struct(col("id"), col("sig"))).as("ks"))
-      .select(col("ks.id").as("id"), col("fp"), col("ks.sig").as("sig"))
+      .agg(min(struct(col("id") +: sigs.map(col): _*)).as("ks"))
+      .select(col("ks.id").as("id") +: col("fp")
+        +: sigs.map(c => col(s"ks.$c").as(c)): _*)
+  }
 
   /** Keeper signature store for a corpus: one `(id, fp, sig)` row per
     * distinct content, signatures from the xxhash64 native family (the
@@ -334,10 +336,9 @@ object Dedup {
     * subsequent ingest with [[minhashLshPairsIncremental]] — the corpus
     * text is never re-signed. */
   def minhashStore(df: DataFrame, idCol: String, textCol: String,
-                   k: Int = 3, bands: Int = 8, rowsPerBand: Int = 4): DataFrame = {
+                   k: Int = 3, bands: Int = 8, rowsPerBand: Int = 4): DataFrame =
     keeperStore(hashedDocs(df, idCol, textCol,
-      t => GraftFunctions.minhashSignature(t, k, bands * rowsPerBand)))
-  }
+      minhashSig(portable = false, k, bands * rowsPerBand)))
 
   /** md5-family store twin (engine-portable arithmetic — see
     * [[minhashLshPairsPortable]]). Store and screen must use the SAME
@@ -346,7 +347,7 @@ object Dedup {
                            k: Int = 3, bands: Int = 8,
                            rowsPerBand: Int = 4): DataFrame =
     keeperStore(hashedDocs(df, idCol, textCol,
-      t => portableSigExpr(t, k, bands * rowsPerBand)))
+      minhashSig(portable = true, k, bands * rowsPerBand)))
 
   /** Signature family of a minhash store, derived from its schema — the
     * ONLY authority on which family a store carries: portable (md5,
@@ -374,11 +375,8 @@ object Dedup {
   def minhashStoreAppend(store: DataFrame, incoming: DataFrame,
                          idCol: String, textCol: String, k: Int = 3,
                          bands: Int = 8, rowsPerBand: Int = 4): DataFrame = {
-    val portable = minhashStoreIsPortable(store)
-    val sigOf: Column => Column =
-      if (portable) t => portableSigExpr(t, k, bands * rowsPerBand)
-      else t => GraftFunctions.minhashSignature(t, k, bands * rowsPerBand)
-    val inHashed = hashedDocs(incoming, idCol, textCol, sigOf)
+    val inHashed = hashedDocs(incoming, idCol, textCol,
+      minhashSig(minhashStoreIsPortable(store), k, bands * rowsPerBand))
     store.unionByName(novelKeepers(inHashed, store))
   }
 
@@ -439,12 +437,9 @@ object Dedup {
                                  corpusText: DataFrame, idCol: String,
                                  textCol: String, k: Int = 3, bands: Int = 8,
                                  rowsPerBand: Int = 4,
-                                 tau: Double = 0.7): DataFrame = {
+                                 tau: Double = 0.7): DataFrame =
     minhashIncrementalCore(incoming, store, corpusText, idCol, textCol,
-      k, bands, rowsPerBand, tau,
-      t => GraftFunctions.minhashSignature(t, k, bands * rowsPerBand),
-      portable = false)
-  }
+      k, bands, rowsPerBand, tau, portable = false)
 
   /** Oracle twin of [[minhashLshPairsIncremental]] (md5 family): the
     * DuckDB oracle runs the batch pipeline over the re-keyed union and
@@ -457,14 +452,12 @@ object Dedup {
                                          bands: Int = 8, rowsPerBand: Int = 4,
                                          tau: Double = 0.7): DataFrame =
     minhashIncrementalCore(incoming, store, corpusText, idCol, textCol,
-      k, bands, rowsPerBand, tau,
-      t => portableSigExpr(t, k, bands * rowsPerBand), portable = true)
+      k, bands, rowsPerBand, tau, portable = true)
 
   private def minhashIncrementalCore(incoming: DataFrame, store: DataFrame,
                                      corpusText: DataFrame, idCol: String,
                                      textCol: String, k: Int, bands: Int,
                                      rowsPerBand: Int, tau: Double,
-                                     sigOf: Column => Column,
                                      portable: Boolean): DataFrame = {
     require(store.columns.toSeq == Seq("id", "fp", "sig"),
       s"store must be a minhashStore frame (id, fp, sig); got " +
@@ -479,7 +472,8 @@ object Dedup {
         s"(${if (portable) "portable" else "native"}); build the store with " +
         "the matching minhashStore/minhashStorePortable")
     val inDocs = incoming.select(col(idCol).as("id"), col(textCol).as("text"))
-    val inHashed = hashedDocs(incoming, idCol, textCol, sigOf)
+    val inHashed = hashedDocs(incoming, idCol, textCol,
+      minhashSig(portable, k, bands * rowsPerBand))
     // Exact-content hits: incoming rows duplicating corpus content star
     // to the corpus keeper and are NOT banded (the batch mega-bucket
     // guard, extended across the increment boundary). Broadcast the
@@ -491,17 +485,7 @@ object Dedup {
     val hitFps = hits.select(col("fp")).distinct()
     val novel = inHashed.join(broadcast(hitFps), Seq("fp"), "left_anti")
     val inKeep = keeperStore(novel)
-    // keeper side EXPLICITLY broadcast: both sides are ingest-bounded by
-    // contract, but the planner's size estimate for them scales with the
-    // backing corpus FILE (the ingest is typically a filtered slice of a
-    // growing table), so the join silently demoted to a sort-merge join
-    // — one extra scale-growing exchange — once the corpus hit ~500k
-    // docs (r10 executed-plan soak find, the r9 verify-join class).
-    val inStars = novel
-      .join(broadcast(inKeep.select(col("fp"), col("id").as("keeper"))), "fp")
-      .filter(col("id") =!= col("keeper"))
-      .select(col("keeper").as("id_a"), col("id").as("id_b"),
-        lit(1.0).as("jaccard"))
+    val inStars = ingestStars(novel, inKeep, lit(1.0).as("jaccard"))
     // LSH candidates: corpus bands derive map-side from stored sigs; the
     // small new-keeper band table broadcasts into them. id_b is always
     // the incoming side (ingest-order ids make corpus < incoming).
@@ -509,11 +493,7 @@ object Dedup {
     val storeBanded = bandedRows(store.select(col("id"), col("sig")),
       bands, rowsPerBand, portable)
     def bandJoin(a: DataFrame, b: DataFrame): DataFrame =
-      a.alias("a").join(broadcast(b.alias("b")),
-          col("a.band") === col("b.band") &&
-            col("a.band_key") === col("b.band_key") &&
-            col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      bandPairs(a.alias("a"), broadcast(b.alias("b")))
     val cand = bandJoin(storeBanded, newBanded)
       .unionByName(bandJoin(newBanded, newBanded))
       .dropDuplicates("id_a", "id_b")
@@ -529,19 +509,27 @@ object Dedup {
     val textA = corpusText
       .select(col(idCol).as("id_a"), col(textCol).as("text_a"))
       .unionByName(inDocs.select(col("id").as("id_a"), col("text").as("text_a")))
-    val verified = textA
+    val verified = jaccardVerified(textA
       .join(broadcast(cand), Seq("id_a"))
       .join(broadcast(inDocs.select(col("id").as("id_b"),
-        col("text").as("text_b"))), Seq("id_b"))
-      .withColumn("sh_a", shingles(col("text_a"), k))
-      .withColumn("sh_b", shingles(col("text_b"), k))
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
-      .filter(col("jaccard") >= tau)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+        col("text").as("text_b"))), Seq("id_b")), k, tau)
     verified.unionByName(crossStars).unionByName(inStars)
   }
+
+  /** Exact duplicates within an ingest's `novel` rows, starred to their
+    * in-batch keeper (`inKeep`) as (keeper, dup, `same`). The keeper side
+    * is EXPLICITLY broadcast: both sides are ingest-bounded by contract,
+    * but the planner's size estimate for them scales with the backing
+    * corpus FILE (the ingest is typically a filtered slice of a growing
+    * table), so the join silently demoted to a sort-merge join — one
+    * extra scale-growing exchange — once the corpus hit ~500k docs (r10
+    * executed-plan soak find, the r9 verify-join class). */
+  private def ingestStars(novel: DataFrame, inKeep: DataFrame,
+                          same: Column): DataFrame =
+    novel
+      .join(broadcast(inKeep.select(col("fp"), col("id").as("keeper"))), "fp")
+      .filter(col("id") =!= col("keeper"))
+      .select(col("keeper").as("id_a"), col("id").as("id_b"), same)
 
   /**
    * 64-bit SimHash over whitespace tokens: sign-sum of per-token xxhash64
@@ -564,19 +552,6 @@ object Dedup {
       lit(0L), (acc, b) => acc.bitwiseOR(b))
   }
 
-  /**
-   * Engine-portable SimHash variant: the per-token 64-bit hash is the
-   * lower 64 hex chars of md5(token), carried as TWO 32-bit halves
-   * (`conv(hex, 16, 10)` on 8-char substrings never leaves signed-long
-   * range; the DuckDB oracle folds the same chars in exact integer
-   * arithmetic), and the signature is likewise kept as (hi, lo) 32-bit
-   * longs end to end — no signed-64 assembly to diverge on. Banding is
-   * the same 4×16-bit pigeonhole as the native form; hamming =
-   * bit_count(lo⊕lo) + bit_count(hi⊕hi). Puts the SimHash FAMILY
-   * (signature, banding, hamming verify) under the exact DuckDB oracle;
-   * [[simhashPairs]] (one native xxhash64 per token) remains the scale
-   * path. Same mega-bucket guard.
-   */
   /** (id, fp, sig_hi, sig_lo) rows under the portable md5 family. */
   private def simhashHashedPortable(df: DataFrame, idCol: String,
                                     textCol: String): DataFrame = {
@@ -628,76 +603,14 @@ object Dedup {
       chunkRanges(32, blocks - bLo).map { case (off, w) =>
         (chunkOf(col("sig_hi"), off, w), w) }
     ).toIndexedSeq
-    val keys = simhashCombos(blocks, maxHamming).map(tableKey(blockCols, _))
-    sigs.select(col("id"), col("sig_hi"), col("sig_lo"),
-        posexplode(array(keys: _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "chunk")
+    comboRows(sigs, blockCols, blocks, maxHamming)
   }
 
-  def simhashPairsPortable(df: DataFrame, idCol: String, textCol: String,
-                           maxHamming: Int = 3,
-                           corpusHint: Long = -1L): DataFrame = {
-    val blocks = simhashBlocks(maxHamming,
-      if (corpusHint >= 0L) corpusHint else estimatedSigRows(df))
-    // spread + compute-once (r16): the per-token md5 vote pass ran twice
-    // (keeper agg + tagged join) on the single scan partition of a small
-    // corpus file — two single-task ~2 s stages at sf0.1. The spread is
-    // identity at real corpus widths; the checkpoint is signature-sized.
-    val hashed = simhashHashedPortable(spreadNarrowScan(df, idCol),
-      idCol, textCol).localCheckpoint(false)
-    val keepers = hashed.groupBy(col("fp")).agg(min(col("id")).as("keeper"))
-    val tagged = hashed.join(keepers, "fp")
-    val dupPairs = tagged.filter(col("id") =!= col("keeper"))
-      .select(col("keeper").as("id_a"), col("id").as("id_b"),
-        lit(0).as("hamming"))
-    val sigs = tagged.filter(col("id") === col("keeper"))
-      .select(col("id"), col("sig_hi"), col("sig_lo"))
-    val banded = simhashBandedPortable(sigs, maxHamming, blocks)
-    val a = banded.alias("a")
-    val b = banded.alias("b")
-    val keeperPairs = a.join(b,
-        col("a.band") === col("b.band") && col("a.chunk") === col("b.chunk") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        col("a.sig_hi").as("hi_a"), col("a.sig_lo").as("lo_a"),
-        col("b.sig_hi").as("hi_b"), col("b.sig_lo").as("lo_b"))
-      // hamming BEFORE the pair dedup (r16, guide §2.3 "aggregate before
-      // you shuffle"): the verify is pure carried-signature bit
-      // arithmetic, so evaluating it map-side per candidate occurrence
-      // (≤ tables-per-doc re-evaluations of two bit_counts) costs
-      // nothing, while the dropDuplicates exchange then carries only
-      // SURVIVING pairs instead of every band collision. Identical
-      // output: duplicates of a pair carry identical signatures, so
-      // filter-then-dedup ≡ dedup-then-filter.
-      .withColumn("hamming",
-        bit_count(col("lo_a").bitwiseXOR(col("lo_b"))) +
-          bit_count(col("hi_a").bitwiseXOR(col("hi_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .dropDuplicates("id_a", "id_b")
-      .select(col("id_a"), col("id_b"), col("hamming"))
-    keeperPairs.unionByName(dupPairs)
-  }
-
-  /** SimHash near-dup candidate pairs within Hamming distance ≤ maxHamming,
-    * using pigeonhole block-combination bucketing sized from the observed
-    * corpus scale ([[simhashBlocks]]) — any pair within the radius shares
-    * at least one exact table key, at EVERY radius and block count
-    * (spec-pinned against the brute-force signature reference, at mixed
-    * corpus hints). `corpusHint` overrides the planner-stats scale
-    * estimate when the caller knows the corpus size (< 0 = derive).
-    *
-    * Same mega-bucket guard as [[minhashLshPairs]]: identical documents
-    * share the whole 64-bit signature, so an N-copy cluster would make all
-    * four band buckets O(N²). Exact dedup runs first — one keeper per
-    * distinct content is banded; duplicates return as a linear
-    * (keeper, dup, hamming = 0) star. The guard pass shuffles only
-    * (fingerprint, id, sig); bodies stay out of every wide exchange. */
   /** (id, fp, sig) rows under the native xxhash64 SimHash family. */
   private def simhashHashed(df: DataFrame, idCol: String,
-                            textCol: String): DataFrame = {
+                            textCol: String): DataFrame =
     df.select(col(idCol).as("id"), md5(col(textCol)).as("fp"),
       GraftFunctions.simhash64(col(textCol)).as("sig"))
-  }
 
   /**
    * Signature block count for a requested Hamming radius and an OBSERVED
@@ -831,42 +744,103 @@ object Dedup {
     val blockCols = chunkRanges(64, blocks).map { case (off, w) =>
       (chunkOf(col("sig"), off, w), w)
     }.toIndexedSeq
+    comboRows(sigs, blockCols, blocks, maxHamming)
+  }
+
+  /** One (id, sig…, band = table index, chunk = table key) row per table. */
+  private def comboRows(sigs: DataFrame, blockCols: IndexedSeq[(Column, Int)],
+                        blocks: Int, maxHamming: Int): DataFrame = {
     val keys = simhashCombos(blocks, maxHamming).map(tableKey(blockCols, _))
-    sigs.select(col("id"), col("sig"), posexplode(array(keys: _*)))
+    sigs.select((col("id") +: sigColumns(sigs).map(col)) :+
+        posexplode(array(keys: _*)): _*)
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "chunk")
   }
 
+  /** SimHash near-dup candidate pairs within Hamming distance ≤ maxHamming,
+    * using pigeonhole block-combination bucketing sized from the observed
+    * corpus scale ([[simhashBlocks]]) — any pair within the radius shares
+    * at least one exact table key, at EVERY radius and block count
+    * (spec-pinned against the brute-force signature reference, at mixed
+    * corpus hints). `corpusHint` overrides the planner-stats scale
+    * estimate when the caller knows the corpus size (< 0 = derive).
+    *
+    * Same mega-bucket guard as [[minhashLshPairs]]: identical documents
+    * share the whole 64-bit signature, so an N-copy cluster would make all
+    * four band buckets O(N²). Exact dedup runs first — one keeper per
+    * distinct content is banded; duplicates return as a linear
+    * (keeper, dup, hamming = 0) star. The guard pass shuffles only
+    * (fingerprint, id, sig); bodies stay out of every wide exchange. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3, corpusHint: Long = -1L): DataFrame = {
+                   maxHamming: Int = 3, corpusHint: Long = -1L): DataFrame =
+    simhashBatchCore(df, idCol, maxHamming, corpusHint,
+      simhashHashed(_, idCol, textCol), simhashBanded, nativeHamming)
+
+  /**
+   * Engine-portable SimHash variant: the per-token 64-bit hash is the
+   * lower 64 hex chars of md5(token), carried as TWO 32-bit halves
+   * (`conv(hex, 16, 10)` on 8-char substrings never leaves signed-long
+   * range; the DuckDB oracle folds the same chars in exact integer
+   * arithmetic), and the signature is likewise kept as (hi, lo) 32-bit
+   * longs end to end — no signed-64 assembly to diverge on. Banding is
+   * the same 4×16-bit pigeonhole as the native form; hamming =
+   * bit_count(lo⊕lo) + bit_count(hi⊕hi). Puts the SimHash FAMILY
+   * (signature, banding, hamming verify) under the exact DuckDB oracle;
+   * [[simhashPairs]] (one native xxhash64 per token) remains the scale
+   * path. Same mega-bucket guard.
+   */
+  def simhashPairsPortable(df: DataFrame, idCol: String, textCol: String,
+                           maxHamming: Int = 3,
+                           corpusHint: Long = -1L): DataFrame =
+    simhashBatchCore(df, idCol, maxHamming, corpusHint,
+      simhashHashedPortable(_, idCol, textCol), simhashBandedPortable,
+      portableHamming)
+
+  /** Hamming distance of the `a`/`b`-aliased native 64-bit signatures. */
+  private def nativeHamming(a: String, b: String): Column =
+    bit_count(col(s"$a.sig").bitwiseXOR(col(s"$b.sig")))
+
+  /** Hamming distance of the `a`/`b`-aliased portable (hi, lo) halves. */
+  private def portableHamming(a: String, b: String): Column =
+    bit_count(col(s"$a.sig_lo").bitwiseXOR(col(s"$b.sig_lo"))) +
+      bit_count(col(s"$a.sig_hi").bitwiseXOR(col(s"$b.sig_hi")))
+
+  /** The one body of [[simhashPairs]] and [[simhashPairsPortable]]: they
+    * differ only in the hashed frame, its banding and `hamming`. */
+  private def simhashBatchCore(df: DataFrame, idCol: String,
+                               maxHamming: Int, corpusHint: Long,
+                               hashedOf: DataFrame => DataFrame,
+                               bandedOf: (DataFrame, Int, Int) => DataFrame,
+                               hamming: (String, String) => Column): DataFrame = {
     val blocks = simhashBlocks(maxHamming,
       if (corpusHint >= 0L) corpusHint else estimatedSigRows(df))
-    // spread + compute-once (r16): see simhashPairsPortable
-    val hashed = simhashHashed(spreadNarrowScan(df, idCol), idCol, textCol)
-      .localCheckpoint(false)
-    val keepers = hashed.groupBy(col("fp")).agg(min(col("id")).as("keeper"))
-    val tagged = hashed.join(keepers, "fp")
-    val dupPairs = tagged.filter(col("id") =!= col("keeper"))
-      .select(col("keeper").as("id_a"), col("id").as("id_b"),
-        lit(0).as("hamming"))
-    val sigs = tagged.filter(col("id") === col("keeper"))
-      .select(col("id"), col("sig"))
-    val banded = simhashBanded(sigs, maxHamming, blocks)
-    val a = banded.alias("a")
-    val b = banded.alias("b")
-    val keeperPairs = a.join(b,
+    // spread + compute-once (r16): see minhashBatchCore; the checkpoint
+    // is signature-sized.
+    val hashed = hashedOf(spreadNarrowScan(df, idCol)).localCheckpoint(false)
+    val (dupPairs, sigs) = keeperStar(hashed, lit(0).as("hamming"))
+    val banded = bandedOf(sigs, maxHamming, blocks)
+    withinRadius(bandHamming(banded.alias("a"), banded.alias("b"), hamming),
+      maxHamming).unionByName(dupPairs)
+  }
+
+  /** (id_a < id_b, hamming) per table-key collision of `a`/`b` rows. */
+  private def bandHamming(a: DataFrame, b: DataFrame,
+                          hamming: (String, String) => Column): DataFrame =
+    a.join(b,
         col("a.band") === col("b.band") && col("a.chunk") === col("b.chunk") &&
           col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
-      // hamming BEFORE the pair dedup (r16): map-side bit arithmetic is
-      // free next to shuffling every band collision — the dedup exchange
-      // carries survivors only. Identical output (see the portable twin).
-      .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .dropDuplicates("id_a", "id_b")
-      .select(col("id_a"), col("id_b"), col("hamming"))
-    keeperPairs.unionByName(dupPairs)
-  }
+        hamming("a", "b").as("hamming"))
+
+  /** The pairs within `maxHamming`, each once. hamming is evaluated
+    * BEFORE the pair dedup (r16, guide §2.3 "aggregate before you
+    * shuffle"): the verify is pure carried-signature bit arithmetic, so
+    * evaluating it map-side per candidate occurrence (≤ tables-per-doc
+    * re-evaluations of the bit_counts) costs nothing, while the
+    * dropDuplicates exchange then carries only SURVIVING pairs instead of
+    * every band collision. Identical output: duplicates of a pair carry
+    * identical signatures, so filter-then-dedup ≡ dedup-then-filter. */
+  private def withinRadius(pairs: DataFrame, maxHamming: Int): DataFrame =
+    pairs.filter(col("hamming") <= maxHamming).dropDuplicates("id_a", "id_b")
 
   // ---------------------------------------------------------------------
   // Incremental SimHash — the SimHash twin of the incremental MinHash
@@ -885,25 +859,19 @@ object Dedup {
   /** Portable-family store twin: `(id, fp, sig_hi, sig_lo)`. */
   def simhashStorePortable(df: DataFrame, idCol: String,
                            textCol: String): DataFrame =
-    keeperStoreHiLo(simhashHashedPortable(df, idCol, textCol))
-
-  private def keeperStoreHiLo(hashed: DataFrame): DataFrame =
-    hashed.groupBy(col("fp"))
-      .agg(min(struct(col("id"), col("sig_hi"), col("sig_lo"))).as("ks"))
-      .select(col("ks.id").as("id"), col("fp"),
-        col("ks.sig_hi").as("sig_hi"), col("ks.sig_lo").as("sig_lo"))
+    keeperStore(simhashHashedPortable(df, idCol, textCol))
 
   /** Append an ingest's novel contents to a SimHash store (either
     * family — detected from the store schema). Same rebuild equivalence
     * as [[minhashStoreAppend]], spec-pinned. */
   def simhashStoreAppend(store: DataFrame, incoming: DataFrame,
-                         idCol: String, textCol: String): DataFrame =
-    if (store.columns.contains("sig_hi"))
-      store.unionByName(keeperStoreHiLo(
-        novelRows(simhashHashedPortable(incoming, idCol, textCol), store)))
-    else
-      store.unionByName(keeperStore(
-        novelRows(simhashHashed(incoming, idCol, textCol), store)))
+                         idCol: String, textCol: String): DataFrame = {
+    val inHashed =
+      if (store.columns.contains("sig_hi"))
+        simhashHashedPortable(incoming, idCol, textCol)
+      else simhashHashed(incoming, idCol, textCol)
+    store.unionByName(keeperStore(novelRows(inHashed, store)))
+  }
 
   /**
    * Incremental SimHash near-dup pairs: all pairs with at least one side
@@ -918,46 +886,9 @@ object Dedup {
   def simhashPairsIncremental(incoming: DataFrame, store: DataFrame,
                               idCol: String, textCol: String,
                               maxHamming: Int = 3,
-                              corpusHint: Long = -1L): DataFrame = {
-    // table layout sizes from the STORE (the corpus side); both banded
-    // frames must share it or the band join keys are incomparable
-    val blocks = simhashBlocks(maxHamming,
-      if (corpusHint >= 0L) corpusHint else estimatedSigRows(store))
-    val inHashed = simhashHashed(incoming, idCol, textCol)
-    val hits = store.select(col("id").as("keeper"), col("fp"))
-      .join(broadcast(inHashed.select(col("id"), col("fp"))), "fp")
-    val crossStars = hits.select(col("keeper").as("id_a"),
-      col("id").as("id_b"), lit(0).as("hamming"))
-    val novel = novelRows(inHashed, store)
-    val inKeep = keeperStore(novel)
-    val inStars = novel
-      // explicit broadcast: ingest-bounded side whose planner estimate
-      // scales with the corpus file — see minhashIncrementalCore
-      .join(broadcast(inKeep.select(col("fp"), col("id").as("keeper"))), "fp")
-      .filter(col("id") =!= col("keeper"))
-      .select(col("keeper").as("id_a"), col("id").as("id_b"),
-        lit(0).as("hamming"))
-    val newBanded = simhashBanded(inKeep, maxHamming, blocks)
-    val storeBanded = simhashBanded(store.select(col("id"), col("sig")),
-      maxHamming, blocks)
-    def bandJoin(x: DataFrame, y: DataFrame): DataFrame =
-      x.alias("a").join(broadcast(y.alias("b")),
-          col("a.band") === col("b.band") &&
-            col("a.chunk") === col("b.chunk") &&
-            col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-          col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
-    val verified = bandJoin(storeBanded, newBanded)
-      .unionByName(bandJoin(newBanded, newBanded))
-      // hamming before the pair dedup (r16): the dedup exchange — the
-      // incremental screen's ONLY corpus-side shuffle — carries
-      // survivors only. Identical output (see simhashPairs).
-      .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .dropDuplicates("id_a", "id_b")
-      .select(col("id_a"), col("id_b"), col("hamming"))
-    verified.unionByName(crossStars).unionByName(inStars)
-  }
+                              corpusHint: Long = -1L): DataFrame =
+    simhashIncrementalCore(store, maxHamming, corpusHint,
+      simhashHashed(incoming, idCol, textCol), simhashBanded, nativeHamming)
 
   /** Oracle twin of [[simhashPairsIncremental]] (md5 (hi, lo) family):
     * the DuckDB gate runs the batch portable pipeline over the re-keyed
@@ -965,45 +896,39 @@ object Dedup {
   def simhashPairsIncrementalPortable(incoming: DataFrame, store: DataFrame,
                                       idCol: String, textCol: String,
                                       maxHamming: Int = 3,
-                                      corpusHint: Long = -1L): DataFrame = {
+                                      corpusHint: Long = -1L): DataFrame =
+    simhashIncrementalCore(store, maxHamming, corpusHint,
+      simhashHashedPortable(incoming, idCol, textCol), simhashBandedPortable,
+      portableHamming)
+
+  /** The one body of the two incremental SimHash screens — the same
+    * three arguments as [[simhashBatchCore]]. */
+  private def simhashIncrementalCore(store: DataFrame, maxHamming: Int,
+                                     corpusHint: Long, inHashed: DataFrame,
+                                     bandedOf: (DataFrame, Int, Int) => DataFrame,
+                                     hamming: (String, String) => Column): DataFrame = {
+    // table layout sizes from the STORE (the corpus side); both banded
+    // frames must share it or the band join keys are incomparable
     val blocks = simhashBlocks(maxHamming,
       if (corpusHint >= 0L) corpusHint else estimatedSigRows(store))
-    val inHashed = simhashHashedPortable(incoming, idCol, textCol)
     val hits = store.select(col("id").as("keeper"), col("fp"))
       .join(broadcast(inHashed.select(col("id"), col("fp"))), "fp")
     val crossStars = hits.select(col("keeper").as("id_a"),
       col("id").as("id_b"), lit(0).as("hamming"))
     val novel = novelRows(inHashed, store)
-    val inKeep = keeperStoreHiLo(novel)
-    val inStars = novel
-      // explicit broadcast: ingest-bounded side whose planner estimate
-      // scales with the corpus file — see minhashIncrementalCore
-      .join(broadcast(inKeep.select(col("fp"), col("id").as("keeper"))), "fp")
-      .filter(col("id") =!= col("keeper"))
-      .select(col("keeper").as("id_a"), col("id").as("id_b"),
-        lit(0).as("hamming"))
-    val newBanded = simhashBandedPortable(inKeep, maxHamming, blocks)
-    val storeBanded = simhashBandedPortable(
-      store.select(col("id"), col("sig_hi"), col("sig_lo")), maxHamming,
-      blocks)
+    val inKeep = keeperStore(novel)
+    val inStars = ingestStars(novel, inKeep, lit(0).as("hamming"))
+    val newBanded = bandedOf(inKeep, maxHamming, blocks)
+    val storeBanded = bandedOf(
+      store.select(col("id") +: sigColumns(inHashed).map(col): _*),
+      maxHamming, blocks)
     def bandJoin(x: DataFrame, y: DataFrame): DataFrame =
-      x.alias("a").join(broadcast(y.alias("b")),
-          col("a.band") === col("b.band") &&
-            col("a.chunk") === col("b.chunk") &&
-            col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-          col("a.sig_hi").as("hi_a"), col("a.sig_lo").as("lo_a"),
-          col("b.sig_hi").as("hi_b"), col("b.sig_lo").as("lo_b"))
-    val verified = bandJoin(storeBanded, newBanded)
-      .unionByName(bandJoin(newBanded, newBanded))
-      // hamming before the pair dedup (r16): survivors-only dedup
-      // exchange. Identical output (see simhashPairsPortable).
-      .withColumn("hamming",
-        bit_count(col("lo_a").bitwiseXOR(col("lo_b"))) +
-          bit_count(col("hi_a").bitwiseXOR(col("hi_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .dropDuplicates("id_a", "id_b")
-      .select(col("id_a"), col("id_b"), col("hamming"))
+      bandHamming(x.alias("a"), broadcast(y.alias("b")), hamming)
+    // hamming before the pair dedup (r16): the dedup exchange — the
+    // incremental screen's ONLY corpus-side shuffle — carries survivors
+    // only (see withinRadius)
+    val verified = withinRadius(bandJoin(storeBanded, newBanded)
+      .unionByName(bandJoin(newBanded, newBanded)), maxHamming)
     verified.unionByName(crossStars).unionByName(inStars)
   }
 
@@ -1320,12 +1245,23 @@ object Dedup {
                       n: Int = 12): DataFrame = {
     // Native codegen'd span fingerprints: one tight loop per doc, 8-byte
     // hashes (not gram strings) through the explode and the exchange.
-    val grams = GraftFunctions.ngramHashes(col(textCol), n, distinct = false)
-    val base = df.select(col(idCol).as("id"), size(grams).as("n_spans"))
-    val hashed = df.select(col(idCol).as("id"), explode(grams).as("h"))
+    val (base, hashed) = spanRows(df, idCol, textCol, n)
     val dupOcc = hashed.groupBy(col("h"))
       .agg(count(lit(1)).as("_occ")).filter(col("_occ") > 1)
-    val dupPerDoc = hashed.join(dupOcc, "h")
+    dupSpanFrac(base, hashed.join(dupOcc, "h"))
+  }
+
+  /** (id, n_spans) per doc and (id, h) per span occurrence of `df`. */
+  private def spanRows(df: DataFrame, idCol: String, textCol: String,
+                       n: Int): (DataFrame, DataFrame) = {
+    val grams = GraftFunctions.ngramHashes(col(textCol), n, distinct = false)
+    (df.select(col(idCol).as("id"), size(grams).as("n_spans")),
+      df.select(col(idCol).as("id"), explode(grams).as("h")))
+  }
+
+  /** (id, n_spans, n_dup_spans, dup_span_frac) from per-occurrence rows. */
+  private def dupSpanFrac(base: DataFrame, dupOcc: DataFrame): DataFrame = {
+    val dupPerDoc = dupOcc
       .groupBy(col("id")).agg(count(lit(1)).as("n_dup_spans"))
     base.join(dupPerDoc, Seq("id"), "left")
       .select(col("id"), col("n_spans"),
@@ -1459,23 +1395,13 @@ object Dedup {
   private def spansScreen(incoming: DataFrame, idCol: String,
                           textCol: String, n: Int,
                           storeOcc: DataFrame => DataFrame): DataFrame = {
-    val grams = GraftFunctions.ngramHashes(col(textCol), n, distinct = false)
-    val base = incoming.select(col(idCol).as("id"), size(grams).as("n_spans"))
-    val hashed = incoming.select(col(idCol).as("id"), explode(grams).as("h"))
+    val (base, hashed) = spanRows(incoming, idCol, textCol, n)
     val batchOcc = hashed.groupBy(col("h")).agg(count(lit(1)).as("occ_b"))
     val storeHits = storeOcc(batchOcc.select(col("h")))
     val dupHashes = batchOcc.join(storeHits, Seq("h"), "left")
       .filter(col("occ_b") + coalesce(col("occ_s"), lit(0L)) > 1)
       .select(col("h"))
-    val dupPerDoc = hashed.join(broadcast(dupHashes), "h")
-      .groupBy(col("id")).agg(count(lit(1)).as("n_dup_spans"))
-    base.join(dupPerDoc, Seq("id"), "left")
-      .select(col("id"), col("n_spans"),
-        coalesce(col("n_dup_spans"), lit(0L)).as("n_dup_spans"))
-      .withColumn("dup_span_frac",
-        when(col("n_spans") > 0,
-          col("n_dup_spans").cast("double") / col("n_spans").cast("double"))
-          .otherwise(lit(0.0)))
+    dupSpanFrac(base, hashed.join(broadcast(dupHashes), "h"))
   }
 
   /**
@@ -1524,18 +1450,11 @@ object Dedup {
                        k: Int = 3, tau: Double = 0.5,
                        minShingles: Int = 1, maxDf: Long = 0L): DataFrame = {
     require(tau > 0.0, "containment tau must be positive (tau <= 0 keeps every colliding pair)")
-    // Spread the shingle-hash computation when the source scan is
-    // under-partitioned (r16, guide §2.5 input skew): a small parquet
-    // file is ONE scan partition, and the tokenize+hash pass — the
-    // operator's dominant CPU — then runs on one core (measured: 3×
-    // ~3 s single-task stages in a 6 s query at sf0.1). The repartition
-    // moves raw text once, only when the scan has fewer partitions than
-    // the session width — at corpus scale the scan is already wide and
-    // no exchange is added.
+    // Spread the shingle-hash pass, the operator's dominant CPU (r16:
+    // 3× ~3 s single-task stages in a 6 s query at sf0.1 without it).
     val nW = df.sparkSession.sessionState.conf.numShufflePartitions
-    val src0 = df.select(col(idCol).as("id"), col(textCol).as("_t"))
-    val src = if (!src0.isStreaming && src0.rdd.getNumPartitions < nW)
-      src0.repartition(nW, col("id")) else src0
+    val src = spreadNarrowScan(
+      df.select(col(idCol).as("id"), col(textCol).as("_t")), "id")
     val base = src
       .select(col("id"), shingleHashes(col("_t"), k).as("sh"))
       .withColumn("n_sh", size(col("sh")).cast("long"))

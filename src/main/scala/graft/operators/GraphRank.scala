@@ -45,20 +45,6 @@ object GraphRank {
    *               convergence test, so the plan/cost is known up front)
    * @param scale  rank-mass denominator: initial rank = scale div N
    * @param dampNum damping numerator in percent (85 = the classic 0.85)
-   * @param loopCodegen whole-stage codegen INSIDE the loop (r15,
-   *               default off — measured): each round's stages are tiny
-   *               on a bench-scale graph, so codegen buys nothing, but
-   *               its per-stage Janino compile serializes every task
-   *               behind the CodeGenerator KeyLock — jstack during a
-   *               slow run showed 31/32 executor threads parked there
-   *               while the compiling thread crawled classloader
-   *               round-trips, and interpreted execution halved the
-   *               loop's wall time under contention with IDENTICAL
-   *               integer ranks (oracle re-certified) and run-to-run
-   *               variance collapsed from 12-159 s to 21-23 s. On a
-   *               real cluster where one round moves billions of edges,
-   *               set true: the compile cost amortizes over minutes of
-   *               per-round work and codegen'd execution wins.
    * @param checkpointEvery materialize ranks every this many iterations
    *               (r15, VERDICT r14 #2 — fewer, wider rounds): each
    *               localCheckpoint is a JOB BARRIER that pays the
@@ -77,8 +63,7 @@ object GraphRank {
                iters: Int = 10, scale: Long = 1000000000000L,
                dampNum: Long = 85L,
                targetEdgesPerPartition: Long = 4000000L,
-               checkpointEvery: Int = 2,
-               loopCodegen: Boolean = false): DataFrame = {
+               checkpointEvery: Int = 2): DataFrame = {
     require(iters >= 1, "pageRank needs at least one iteration")
     require(checkpointEvery >= 1, "checkpointEvery must be positive")
     require(scale > 0L && dampNum >= 0L && dampNum <= 100L,
@@ -107,9 +92,18 @@ object GraphRank {
       // explicit nP repartitions, or every round pays a re-widening
       // exchange on one join side.
       spark.conf.set(partKey, nP.toString)
-      // Whole-stage codegen per `loopCodegen` (see param scaladoc):
-      // off by default — compile serialization dominates tiny rounds.
-      spark.conf.set(wscgKey, loopCodegen.toString)
+      // No whole-stage codegen INSIDE the loop (r15, measured): each
+      // round's stages are tiny on a bench-scale graph, so codegen buys
+      // nothing, but its per-stage Janino compile serializes every task
+      // behind the CodeGenerator KeyLock — jstack during a slow run
+      // showed 31/32 executor threads parked there while the compiling
+      // thread crawled classloader round-trips, and interpreted
+      // execution halved the loop's wall time under contention with
+      // IDENTICAL integer ranks (oracle re-certified) and run-to-run
+      // variance collapsed from 12-159 s to 21-23 s. A graph whose
+      // rounds move billions of edges would amortize the compile; no
+      // caller runs one.
+      spark.conf.set(wscgKey, "false")
       try {
         // Edges keyed by src (the per-round join key) with the source's
         // out-degree folded in as a column — the window runs over the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -157,9 +157,7 @@ object Relevance {
 
   private def rankBm25Scores(scored: DataFrame, k: Int): DataFrame = {
     val agg = scored.groupBy("doc_id").agg(round(sum(col("ts")), 6).as("score"))
-    val w = Window.orderBy(col("score").desc, col("doc_id").asc)
-    agg.orderBy(col("score").desc, col("doc_id").asc).limit(k)
-      .withColumn("rn", row_number().over(w))
+    Similarity.takeTopK(agg, "score", "doc_id", k)
       .select(col("doc_id"), col("score"), col("rn"))
   }
 
@@ -469,10 +467,7 @@ object Relevance {
     // bounded-model: one 2-long agg of the k-bounded candidate set,
     // pushed into the meta scan so the map-only join also row-group
     // prunes
-    val b = r.agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
-      .collect().headOption.filterNot(_.isNullAt(0))
-      .map(row => (row.getLong(0), row.getLong(1)))
-    val mRanged = b match {
+    val mRanged = Similarity.minMax(r, "doc_id") match {
       case Some((lo, hi)) =>
         m.filter(col("doc_id") >= lo && col("doc_id") <= hi)
       case None => m.filter(lit(false))
@@ -482,9 +477,7 @@ object Relevance {
       .orderBy(col("score").desc, col("doc_id").asc)
     val capped = joined.withColumn("grn", row_number().over(wg))
       .filter(col("grn") <= maxPerGroup)
-    val w = Window.orderBy(col("score").desc, col("doc_id").asc)
-    capped.orderBy(col("score").desc, col("doc_id").asc).limit(k)
-      .withColumn("rn", row_number().over(w))
+    Similarity.takeTopK(capped, "score", "doc_id", k)
       .select(col("doc_id"), col("grp"), col("score"), col("grn"),
         col("rn"))
   }
@@ -541,9 +534,7 @@ object Relevance {
     val scored = scoreBm25(tfq, dfq, bm25IndexStats(spark, path), k1, b)
     val agg = scored.groupBy("query_id", "doc_id")
       .agg(round(sum(col("ts")), 6).as("score"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-    agg.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+    Similarity.rankWithin(agg, "query_id", "score", "doc_id", k)
       .select(col("query_id"), col("doc_id"), col("score"), col("rn"))
   }
 
@@ -589,13 +580,8 @@ object Relevance {
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
         col("rn").as("rn_sem"))
     val fused = lex.join(sem, Seq("query_id", "doc_id"), "full_outer")
-      .withColumn("rrf", round(
-        coalesce(lit(1.0) / (lit(rrfK.toDouble) + col("rn_lex").cast("double")), lit(0.0))
-          + coalesce(lit(1.0) / (lit(rrfK.toDouble) + col("rn_sem").cast("double")), lit(0.0)),
-        6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("rrf").desc, col("doc_id").asc)
-    fused.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+      .withColumn("rrf", rrfScore(rrfK))
+    Similarity.rankWithin(fused, "query_id", "rrf", "doc_id", k)
       .select(col("query_id"), col("doc_id"), col("rn_lex"), col("rn_sem"),
         col("rrf"), col("rn"))
   }
@@ -710,19 +696,20 @@ object Relevance {
         col("id") === queryVecId, k = kSem)
       .select(col("neighbor_id").as("doc_id"), col("rn").as("rn_sem"))
 
+  /** The rrf score of a (rn_lex, rn_sem) row, a missing rank adding 0. */
+  private def rrfScore(rrfK: Int): Column = round(
+    coalesce(lit(1.0) / (lit(rrfK.toDouble) + col("rn_lex").cast("double")), lit(0.0))
+      + coalesce(lit(1.0) / (lit(rrfK.toDouble) + col("rn_sem").cast("double")), lit(0.0)),
+    6)
+
   /** Reciprocal-rank fusion of the two ranked lists (shared by the
     * scanned and indexed forms — the fixed (lex, sem) summation order
-    * and 6-dp round are the determinism contract). */
+    * and 6-dp round of [[rrfScore]] are the determinism contract). */
   private def rrfFuse(lex: DataFrame, sem: DataFrame,
                       k: Int, rrfK: Int): DataFrame = {
     val fused = lex.join(sem, Seq("doc_id"), "full_outer")
-      .withColumn("rrf", round(
-        coalesce(lit(1.0) / (lit(rrfK.toDouble) + col("rn_lex").cast("double")), lit(0.0))
-          + coalesce(lit(1.0) / (lit(rrfK.toDouble) + col("rn_sem").cast("double")), lit(0.0)),
-        6))
-    val w = Window.orderBy(col("rrf").desc, col("doc_id").asc)
-    fused.orderBy(col("rrf").desc, col("doc_id").asc).limit(k)
-      .withColumn("rn", row_number().over(w))
+      .withColumn("rrf", rrfScore(rrfK))
+    Similarity.takeTopK(fused, "rrf", "doc_id", k)
       .select(col("doc_id"), col("rn_lex"), col("rn_sem"), col("rrf"), col("rn"))
   }
 
@@ -883,14 +870,7 @@ object Relevance {
         (col("tf").cast("double")
           * log(col("n_docs").cast("double") / col("df").cast("double")))
           .as("wt"))
-    // in-order fold for the norm: bit-reproducible under any partitioning
-    val norms = weighted.groupBy(col("rid"))
-      .agg(aggregate(
-        array_sort(collect_list(struct(col("term"), col("wt")))),
-        lit(0.0),
-        (acc, x) => acc + x.getField("wt") * x.getField("wt")).as("n2"))
-      .filter(col("n2") > 0.0)
-      .select(col("rid"), sqrt(col("n2")).as("nrm"))
+    val norms = l2Norms(weighted, "rid")
     // wn = 0 postings (corpus-universal terms, idf exactly 0) are EXACT
     // dead weight: their pair products are +0.0, a float no-op in the
     // fold (acc + 0.0 ≡ acc on a non-negative accumulator, and the
@@ -1048,17 +1028,30 @@ object Relevance {
         (col("tf").cast("double")
           * log(col("n0").cast("double") / col("df").cast("double")))
           .as("wt"))
-    val norms = weighted.groupBy(col("rid"))
+    storePostings(weighted)
+  }
+
+  /** (ia, ib, term, p = wn·wn) of joined `a`/`b` (id, term, wn) postings. */
+  private def termProduct: Seq[Column] = Seq(col("a.id").as("ia"),
+    col("b.id").as("ib"), col("a.term").as("term"),
+    (col("a.wn") * col("b.wn")).as("p"))
+
+  /** Store rows (normalized `wn`, prefix bound) of weighted postings. */
+  private def storePostings(weighted: DataFrame): DataFrame =
+    withPrefixBound(weighted.join(l2Norms(weighted, "rid"), "rid")
+      .select(col("rid").as("id"), col("fp"), col("term"), col("df"),
+        (col("wt") / col("nrm")).as("wn"), col("n0")))
+
+  /** Per-`key` L2 norm `nrm` of (term, wt) postings, zero norms dropped;
+    * an in-term-order fold, bit-reproducible under any partitioning. */
+  private def l2Norms(weighted: DataFrame, key: String): DataFrame =
+    weighted.groupBy(col(key))
       .agg(aggregate(
         array_sort(collect_list(struct(col("term"), col("wt")))),
         lit(0.0),
         (acc, x) => acc + x.getField("wt") * x.getField("wt")).as("n2"))
       .filter(col("n2") > 0.0)
-      .select(col("rid"), sqrt(col("n2")).as("nrm"))
-    withPrefixBound(weighted.join(norms, "rid")
-      .select(col("rid").as("id"), col("fp"), col("term"), col("df"),
-        (col("wt") / col("nrm")).as("wn"), col("n0")))
-  }
+      .select(col(key), sqrt(col("n2")).as("nrm"))
 
   /** Append the persisted per-posting prefix bound `bnd` — the running
     * inclusive L2 norm in (df desc, term asc) order. Per-vector and
@@ -1130,16 +1123,7 @@ object Relevance {
         (col("tf").cast("double")
           * log(col("n0").cast("double")
             / coalesce(col("df0"), lit(1L)).cast("double"))).as("wt"))
-    val norms = weighted.groupBy(col("rid"))
-      .agg(aggregate(
-        array_sort(collect_list(struct(col("term"), col("wt")))),
-        lit(0.0),
-        (acc, x) => acc + x.getField("wt") * x.getField("wt")).as("n2"))
-      .filter(col("n2") > 0.0)
-      .select(col("rid"), sqrt(col("n2")).as("nrm"))
-    withPrefixBound(weighted.join(norms, "rid")
-      .select(col("rid").as("id"), col("fp"), col("term"), col("df"),
-        (col("wt") / col("nrm")).as("wn"), col("n0")))
+    storePostings(weighted)
   }
 
   /**
@@ -1239,13 +1223,7 @@ object Relevance {
         (col("tf").cast("double")
           * log(col("n0").cast("double")
             / coalesce(col("df0"), lit(1L)).cast("double"))).as("wt"))
-    val inNorms = inW.groupBy(col("id"))
-      .agg(aggregate(
-        array_sort(collect_list(struct(col("term"), col("wt")))),
-        lit(0.0),
-        (acc, x) => acc + x.getField("wt") * x.getField("wt")).as("n2"))
-      .filter(col("n2") > 0.0)
-      .select(col("id"), sqrt(col("n2")).as("nrm"))
+    val inNorms = l2Norms(inW, "id")
     val inPosts0 = inW.join(inNorms, "id")
       .select(col("id"), col("term"), col("df0"),
         (col("wt") / col("nrm")).as("wn"))
@@ -1270,8 +1248,7 @@ object Relevance {
       if (!prefixFilter)
         inPosts.alias("a")
           .join(stPosts.alias("b"), col("a.term") === col("b.term"))
-          .select(col("a.id").as("ia"), col("b.id").as("ib"),
-            col("a.term").as("term"), (col("a.wn") * col("b.wn")).as("p"))
+          .select(termProduct: _*)
       else {
         val stIdx = stPosts.filter(col("bnd") >= thr)
           .select(col("id"), col("term"), col("wn"))
@@ -1279,8 +1256,7 @@ object Relevance {
           .select(col("id").as("ib"), col("term"), col("wn").as("wb"))
         val s1 = inPosts.alias("a")
           .join(stIdx.alias("b"), col("a.term") === col("b.term"))
-          .select(col("a.id").as("ia"), col("b.id").as("ib"),
-            col("a.term").as("term"), (col("a.wn") * col("b.wn")).as("p"))
+          .select(termProduct: _*)
         val cand = s1.select(col("ia"), col("ib")).distinct()
         val s2 = cand
           .join(stPref, "ib")
@@ -1295,8 +1271,7 @@ object Relevance {
         inPosts.alias("a")
           .join(inPosts.alias("b"),
             col("a.term") === col("b.term") && col("a.id") < col("b.id"))
-          .select(col("a.id").as("ia"), col("b.id").as("ib"),
-            col("a.term").as("term"), (col("a.wn") * col("b.wn")).as("p"))
+          .select(termProduct: _*)
       else {
         val bw = Window.partitionBy(col("id"))
           .orderBy(col("df0").desc, col("term").asc)
@@ -1310,8 +1285,7 @@ object Relevance {
         val i1 = inIdx.alias("a")
           .join(inPosts.alias("b"),
             col("a.term") === col("b.term") && col("a.id") < col("b.id"))
-          .select(col("a.id").as("ia"), col("b.id").as("ib"),
-            col("a.term").as("term"), (col("a.wn") * col("b.wn")).as("p"))
+          .select(termProduct: _*)
         val icand = i1.select(col("ia"), col("ib")).distinct()
         val i2 = icand
           .join(inPref, "ia")

@@ -96,25 +96,23 @@ object RobustStats {
    * nothing. One groupBy aggregation pass for all cut points (exact
    * percentiles, same engine-parity contract as [[winsorize]]), then a
    * join back on the group key. The cut-point frame has one row per
-   * group, and `broadcastCuts = true` (default) makes the broadcast a
+   * group, and an explicit broadcast hint makes the broadcast a
    * CONTRACT rather than a planner courtesy (r14, VERDICT r13 #5: the
    * hint-free form silently demoted to a shuffle join when the
    * one-row-per-group frame's size estimate crossed the threshold —
    * output identical, corpus re-shuffled). The stated bound: group keys
    * here are language/source/shard-tier columns, at most ~10⁵ groups ×
-   * a few doubles — driver-trivial; pass `false` for a genuinely
-   * high-cardinality key (e.g. per-user groups) to fall back to the
-   * shuffle join, both correct. Rows with a NULL group get NULL clamped
-   * values (no population to calibrate against — same refusal
-   * discipline as the MAD-0 z). Output:
-   * `(idCol, groupCol, <f>_w … per feature)`.
+   * a few doubles — driver-trivial; a genuinely high-cardinality key
+   * (e.g. per-user groups) is outside this operator's contract. Rows
+   * with a NULL group get NULL clamped values (no population to
+   * calibrate against — same refusal discipline as the MAD-0 z).
+   * Output: `(idCol, groupCol, <f>_w … per feature)`.
    */
   def winsorizeBy(df: DataFrame, idCol: String, groupCol: String,
                   featureCols: Seq[String],
-                  pLo: Double = 0.05, pHi: Double = 0.95,
-                  broadcastCuts: Boolean = true): DataFrame =
+                  pLo: Double = 0.05, pHi: Double = 0.95): DataFrame =
     clampByAt(df, idCol, groupCol, featureCols, pLo, pHi,
-      (f, p) => expr(s"percentile($f, $p)"), broadcastCuts)
+      (f, p) => expr(s"percentile($f, $p)"))
 
   /** [[winsorizeBy]] with `approx_percentile` cut points — the
     * bounded-memory per-group scale path (one mergeable sketch per
@@ -124,33 +122,21 @@ object RobustStats {
   def winsorizeByApprox(df: DataFrame, idCol: String, groupCol: String,
                         featureCols: Seq[String],
                         pLo: Double = 0.05, pHi: Double = 0.95,
-                        accuracy: Int = 10000,
-                        broadcastCuts: Boolean = true): DataFrame =
+                        accuracy: Int = 10000): DataFrame =
     clampByAt(df, idCol, groupCol, featureCols, pLo, pHi,
-      (f, p) => expr(s"approx_percentile($f, $p, $accuracy)").cast("double"),
-      broadcastCuts)
+      (f, p) => expr(s"approx_percentile($f, $p, $accuracy)").cast("double"))
 
   private def clampByAt(df: DataFrame, idCol: String, groupCol: String,
                         featureCols: Seq[String], pLo: Double, pHi: Double,
-                        cut: (String, Double) => org.apache.spark.sql.Column,
-                        broadcastCuts: Boolean)
+                        cut: (String, Double) => org.apache.spark.sql.Column)
       : DataFrame = {
     require(featureCols.nonEmpty, "winsorize needs at least one feature")
     require(0.0 <= pLo && pLo < pHi && pHi <= 1.0,
       s"need 0 <= pLo < pHi <= 1: ($pLo, $pHi)")
-    val base = df.select(col(idCol) +: col(groupCol).as("_g") +:
-      featureCols.map(f => col(f).cast("double").as(f)): _*)
-    val cutExprs = featureCols.flatMap(f => Seq(
-      cut(f, pLo).as(s"_lo_$f"), cut(f, pHi).as(s"_hi_$f")))
-    val cuts0 = base.filter(col("_g").isNotNull)
-      .groupBy(col("_g")).agg(cutExprs.head, cutExprs.tail: _*)
-    val cuts = if (broadcastCuts) broadcast(cuts0) else cuts0
-    base.join(cuts, Seq("_g"), "left")
-      .select(col(idCol) +: col("_g").as(groupCol) +:
-        featureCols.map(f =>
-          when(col(f).isNull || col("_g").isNull, lit(null)).otherwise(
-            round(least(greatest(col(f), col(s"_lo_$f")), col(s"_hi_$f")), 6))
-            .as(s"${f}_w")): _*)
+    byGroupAt(df, idCol, groupCol, featureCols,
+      featureCols.flatMap(f => Seq(
+        cut(f, pLo).as(s"_lo_$f"), cut(f, pHi).as(s"_hi_$f"))), "_w",
+      f => round(least(greatest(col(f), col(s"_lo_$f")), col(s"_hi_$f")), 6))
   }
 
   /**
@@ -162,51 +148,56 @@ object RobustStats {
    * decile" is really a curriculum by language. Same shape (one groupBy
    * aggregation for all cut points, join back on the group key — the
    * one-row-per-group cuts frame is explicitly `broadcast()` under the
-   * same `broadcastCuts` contract as [[winsorizeBy]], r14), same
-   * tie-to-lower-bin arithmetic, same engine-parity contract, same
-   * null-group refusal: a NULL group has no population to calibrate
-   * against, so its bins are NULL.
+   * same contract as [[winsorizeBy]], r14), same tie-to-lower-bin
+   * arithmetic, same engine-parity contract, same null-group refusal:
+   * a NULL group has no population to calibrate against, so its bins
+   * are NULL.
    * Output: `(idCol, groupCol, <f>_bin … per feature)` as longs.
    */
   def quantileBinsBy(df: DataFrame, idCol: String, groupCol: String,
-                     featureCols: Seq[String], nBins: Int = 10,
-                     broadcastCuts: Boolean = true): DataFrame =
+                     featureCols: Seq[String], nBins: Int = 10): DataFrame =
     binsByAt(df, idCol, groupCol, featureCols, nBins,
-      (f, p) => expr(s"percentile($f, $p)"), broadcastCuts)
+      (f, p) => expr(s"percentile($f, $p)"))
 
   /** [[quantileBinsBy]] with `approx_percentile` cut points — the
     * bounded-memory per-group scale path; approximate ⇒ rows-only gate,
     * the exact twin certifies the arithmetic. */
   def quantileBinsByApprox(df: DataFrame, idCol: String, groupCol: String,
                            featureCols: Seq[String], nBins: Int = 10,
-                           accuracy: Int = 10000,
-                           broadcastCuts: Boolean = true): DataFrame =
+                           accuracy: Int = 10000): DataFrame =
     binsByAt(df, idCol, groupCol, featureCols, nBins,
-      (f, p) => expr(s"approx_percentile($f, $p, $accuracy)").cast("double"),
-      broadcastCuts)
+      (f, p) => expr(s"approx_percentile($f, $p, $accuracy)").cast("double"))
 
   private def binsByAt(df: DataFrame, idCol: String, groupCol: String,
                        featureCols: Seq[String], nBins: Int,
-                       cut: (String, Double) => org.apache.spark.sql.Column,
-                       broadcastCuts: Boolean)
+                       cut: (String, Double) => org.apache.spark.sql.Column)
       : DataFrame = {
     require(featureCols.nonEmpty, "binning needs at least one feature")
     require(nBins >= 2, s"need at least 2 bins: $nBins")
+    byGroupAt(df, idCol, groupCol, featureCols,
+      featureCols.flatMap(f => (1 until nBins).map(i =>
+        cut(f, i.toDouble / nBins).as(s"_c${i}_$f"))), "_bin",
+      f => (1 until nBins).map(i =>
+        (col(f) > col(s"_c${i}_$f")).cast("long")).reduce(_ + _))
+  }
+
+  /** The one body of [[clampByAt]] and [[binsByAt]]: per-group cuts,
+    * broadcast back; `<f><suffix>` = `value(f)`, NULL for a NULL group. */
+  private def byGroupAt(df: DataFrame, idCol: String, groupCol: String,
+                        featureCols: Seq[String],
+                        cutExprs: Seq[org.apache.spark.sql.Column],
+                        suffix: String,
+                        value: String => org.apache.spark.sql.Column)
+      : DataFrame = {
     val base = df.select(col(idCol) +: col(groupCol).as("_g") +:
       featureCols.map(f => col(f).cast("double").as(f)): _*)
-    val cutExprs = featureCols.flatMap(f => (1 until nBins).map(i =>
-      cut(f, i.toDouble / nBins).as(s"_c${i}_$f")))
-    val cuts0 = base.filter(col("_g").isNotNull)
+    val cuts = base.filter(col("_g").isNotNull)
       .groupBy(col("_g")).agg(cutExprs.head, cutExprs.tail: _*)
-    val cuts = if (broadcastCuts) broadcast(cuts0) else cuts0
-    base.join(cuts, Seq("_g"), "left")
+    base.join(broadcast(cuts), Seq("_g"), "left")
       .select(col(idCol) +: col("_g").as(groupCol) +:
-        featureCols.map { f =>
-          val bin = (1 until nBins).map(i =>
-            (col(f) > col(s"_c${i}_$f")).cast("long")).reduce(_ + _)
-          when(col(f).isNull || col("_g").isNull, lit(null)).otherwise(bin)
-            .as(s"${f}_bin")
-        }: _*)
+        featureCols.map(f =>
+          when(col(f).isNull || col("_g").isNull, lit(null))
+            .otherwise(value(f)).as(s"$f$suffix")): _*)
   }
 
   private def clampAt(df: DataFrame, idCol: String,

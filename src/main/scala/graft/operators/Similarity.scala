@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -18,7 +19,7 @@ import graft.functions.GraftFunctions
  *  - Dot products and LSH signatures are native codegen'd Catalyst
  *    expressions ([[GraftFunctions.dot]] / [[GraftFunctions.lshBucket]] —
  *    the `zip_with` + `aggregate` HOF forms are CodegenFallback and cost a
- *    boxed lambda per component; kept as `dotHof`/`lshSignatureHof`
+ *    boxed lambda per component; `SimilaritySpec` keeps them as the
  *    bit-parity references).
  *    Norms are precomputed per side before the join so each pair costs one
  *    dot.
@@ -37,11 +38,6 @@ object Similarity {
     * column: usable in any session, nothing registered. */
   def dot(a: Column, b: Column): Column = GraftFunctions.dot(a, b)
 
-  /** The declarative fold — kept as the bit-parity reference for
-    * [[dot]] (pinned in `SimilaritySpec`). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
   def norm2(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm2(a) * norm2(b))
@@ -53,43 +49,60 @@ object Similarity {
    * neighbor id.
    */
   def bruteForceTopK(df: DataFrame, idCol: String, vecCol: String,
-                     queryPred: Column, k: Int): DataFrame = {
-    val scored = bruteForceScored(df, idCol, vecCol, queryPred)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rn"))
-  }
+                     queryPred: Column, k: Int): DataFrame =
+    bruteForceTopKWhere(df, idCol, vecCol, queryPred, lit(true), k)
 
   /** The scored pair set BEFORE the top-k window — shared by
-    * [[bruteForceTopK]] and [[mmrRerank]] (which must filter degenerate
-    * cosines ahead of the window, ADVICE r15). Ranks use the
-    * 6-digit-rounded cosine (with the id tie-break) so the top-k
-    * frontier is stable across engines/summation orders — the raw
+    * [[bruteForceTopKWhere]] and [[mmrRerank]] (which must filter
+    * degenerate cosines ahead of the window, ADVICE r15); the
+    * unfiltered callers pass `lit(true)`, which `PruneFilters` drops.
+    * Ranks use the 6-digit-rounded cosine (with the id tie-break) so the
+    * top-k frontier is stable across engines/summation orders — the raw
     * double could flip ranks on last-bit differences. */
   private def bruteForceScored(df: DataFrame, idCol: String, vecCol: String,
-                               queryPred: Column): DataFrame = {
-    val base = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("n", norm2(col("v")))
-    val queries = base.filter(queryPred)
-    val corpus = base
-    val q = queries.alias("q")
-    val c = corpus.alias("c")
+                               queryPred: Column,
+                               corpusPred: Column): DataFrame = {
+    val q = prepVecs(df, idCol, vecCol).filter(queryPred).alias("q")
+    val c = prepVecs(df.filter(corpusPred), idCol, vecCol).alias("c")
     c.join(broadcast(q), col("q.id") =!= col("c.id"))
       .select(col("q.id").as("query_id"), col("c.id").as("neighbor_id"),
-        round(dot(col("q.v"), col("c.v")) / (col("q.n") * col("c.n")), 6).as("cos"))
+        aliasCos("q", "c"))
   }
 
-  /**
-   * Filtered exact top-k: neighbors restricted to corpus rows satisfying
-   * `corpusPred` (a predicate over the ORIGINAL `df` columns — e.g. a
-   * metadata/label column), queries still drawn from the full table by
-   * `queryPred` (over the renamed `id`). The exact baseline for
-   * [[ivfTopKWhere]]: pre-filter-then-scan, so the predicate reaches the
-   * parquet scan (PushedFilters) and the scored join touches only
-   * matching rows — at 10% selectivity the pair volume drops 10× before
-   * any vector arithmetic runs.
-   */
+  /** Per-query top-k of scored (query_id, neighbor_id, cos) pairs — the
+    * one ranking tail of every top-k search here. */
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame =
+    rankWithin(scored, "query_id", "cos", "neighbor_id", k)
+      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rn"))
+
+  /** The first `k` rows of each `part` value by (`score` desc, `tie`
+    * asc), ranked 1.. in `rn`. */
+  private[operators] def rankWithin(df: DataFrame, part: String,
+                                    score: String, tie: String,
+                                    k: Int): DataFrame = {
+    val w = Window.partitionBy(col(part))
+      .orderBy(col(score).desc, col(tie).asc)
+    df.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+  }
+
+  /** Global top-`k` by (`score` desc, `tie` asc), ranked in `rn`:
+    * TakeOrdered, never a global sort. */
+  private[operators] def takeTopK(df: DataFrame, score: String, tie: String,
+                                  k: Int): DataFrame = {
+    val order = Seq(col(score).desc, col(tie).asc)
+    df.orderBy(order: _*).limit(k)
+      .withColumn("rn", row_number().over(Window.orderBy(order: _*)))
+  }
+
+  /** 6-dp cosine of the `q`/`c`-aliased pair's (v, n) columns. */
+  private def aliasCos(q: String, c: String): Column =
+    round(dot(col(s"$q.v"), col(s"$c.v")) / (col(s"$q.n") * col(s"$c.n")), 6)
+      .as("cos")
+
+  /** 6-dp cosine of a query-side (qv, qn) against a corpus-side (v, n). */
+  private def rerankCos: Column =
+    round(dot(col("qv"), col("v")) / (col("qn") * col("n")), 6).as("cos")
+
   /**
    * MMR (maximal marginal relevance, Carbonell & Goldstein SIGIR 1998)
    * diversity rerank over the exact top-`nCandidates` cosine list: the
@@ -132,11 +145,9 @@ object Similarity {
     // similarity evidence. Zero-NORM vectors never reach here: ANSI mode
     // refuses their 0-divisor cosine inside the scored join, loudly.
     val finite = !isnan(col("cos")) && abs(col("cos")) <= lit(Double.MaxValue)
-    val scored = bruteForceScored(df, idCol, vecCol, queryPred).filter(finite)
-    val wTop = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    val cand = scored.withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= nCandidates)
+    val scored = bruteForceScored(df, idCol, vecCol, queryPred, lit(true))
+      .filter(finite)
+    val cand = rankTopK(scored, nCandidates)
       .select(col("neighbor_id"), col("cos")).collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
       .filter { case (_, cs) => java.lang.Double.isFinite(cs) }
@@ -190,45 +201,25 @@ object Similarity {
       .toDF("doc_id", "cos", "mmr", "rn")
   }
 
+  /**
+   * Filtered exact top-k: neighbors restricted to corpus rows satisfying
+   * `corpusPred` (a predicate over the ORIGINAL `df` columns — e.g. a
+   * metadata/label column), queries still drawn from the full table by
+   * `queryPred` (over the renamed `id`). The exact baseline for
+   * [[ivfTopKWhere]]: pre-filter-then-scan, so the predicate reaches the
+   * parquet scan (PushedFilters) and the scored join touches only
+   * matching rows — at 10% selectivity the pair volume drops 10× before
+   * any vector arithmetic runs.
+   */
   def bruteForceTopKWhere(df: DataFrame, idCol: String, vecCol: String,
                           queryPred: Column, corpusPred: Column,
-                          k: Int): DataFrame = {
-    def prep(d: DataFrame): DataFrame =
-      d.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-        .withColumn("n", norm2(col("v")))
-    val q = prep(df).filter(queryPred).alias("q")
-    val c = prep(df.filter(corpusPred)).alias("c")
-    val scored = c.join(broadcast(q), col("q.id") =!= col("c.id"))
-      .select(col("q.id").as("query_id"), col("c.id").as("neighbor_id"),
-        round(dot(col("q.v"), col("c.v")) / (col("q.n") * col("c.n")), 6).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rn"))
-  }
-
-  /** Deterministic pseudo-random hyperplane component for (plane, dim):
-    * xxhash64 of the pair, scaled to [-1, 1). Cheap, seedable, and
-    * reproducible across runs/engines. */
-  private def planeComponent(plane: Int, dim: Column): Column =
-    (xxhash64(lit(plane), dim).cast("double") / lit(Long.MaxValue.toDouble))
+                          k: Int): DataFrame =
+    rankTopK(bruteForceScored(df, idCol, vecCol, queryPred, corpusPred), k)
 
   /** `planes`-bit random-hyperplane signature of a double-array column —
     * native codegen'd expression ([[graft.functions.LshBucketExpr]]). */
   def lshSignature(v: Column, planes: Int): Column =
     GraftFunctions.lshBucket(v, planes)
-
-  /** Declarative HOF form — bit-parity reference for [[lshSignature]]
-    * (pinned in `SimilaritySpec`). */
-  def lshSignatureHof(v: Column, planes: Int): Column = {
-    val bits = (0 until planes).map { p =>
-      val proj = aggregate(
-        zip_with(v, sequence(lit(0), size(v) - 1), (x, i) => x * planeComponent(p, i)),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj >= 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
-    }
-    bits.reduce(_ bitwiseOR _)
-  }
 
   /**
    * Approximate nearest neighbors via hyperplane-LSH bucketing: corpus and
@@ -237,20 +228,22 @@ object Similarity {
    * (fewer planes → bigger buckets → higher recall, more compute).
    */
   def lshTopK(df: DataFrame, idCol: String, vecCol: String,
-              queryPred: Column, k: Int, planes: Int = 8): DataFrame = {
-    val base = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("n", norm2(col("v")))
-      .withColumn("bucket", lshSignature(col("v"), planes))
+              queryPred: Column, k: Int, planes: Int = 8): DataFrame =
+    bucketTopK(df, idCol, vecCol, queryPred, k, lshSignature(_, planes))
+
+  /** The one body of [[lshTopK]] and [[lshTopKPortable]], which differ
+    * only in the `bucketOf` signature of the vector `v`. */
+  private def bucketTopK(df: DataFrame, idCol: String, vecCol: String,
+                         queryPred: Column, k: Int,
+                         bucketOf: Column => Column): DataFrame = {
+    val base = prepVecs(df, idCol, vecCol)
+      .withColumn("bucket", bucketOf(col("v")))
     val q = base.filter(queryPred).alias("q")
     val c = base.alias("c")
-    val scored = c.join(broadcast(q),
+    rankTopK(c.join(broadcast(q),
         col("q.bucket") === col("c.bucket") && col("q.id") =!= col("c.id"))
       .select(col("q.id").as("query_id"), col("c.id").as("neighbor_id"),
-        round(dot(col("q.v"), col("c.v")) / (col("q.n") * col("c.n")), 6).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rn"))
+        aliasCos("q", "c")), k)
   }
 
   /**
@@ -286,20 +279,33 @@ object Similarity {
                                outDim: Int): DataFrame = {
     require(outDim >= 1, s"outDim must be positive, got $outDim")
     val v = col(vecCol).cast("array<double>")
-    val projs = array((0 until outDim).map { p =>
-      round(aggregate(
-        zip_with(v, sequence(lit(0), size(v) - 1),
-          (x, i) => x * planeComponentPortable(p, i)),
-        lit(0.0), (acc, x) => acc + x), 6)
-    }: _*)
-    df.select(col(idCol).as("id"), projs.as("rp"))
+    df.select(col(idCol).as("id"),
+      array((0 until outDim).map(p => round(portableProjection(v, p), 6)): _*)
+        .as("rp"))
   }
+
+  /** Projection of `v` onto md5 plane `p` as an explicit in-order fold,
+    * so DuckDB's `list_reduce` replays it bit-identically. */
+  private def portableProjection(v: Column, p: Int): Column =
+    aggregate(
+      zip_with(v, sequence(lit(0), size(v) - 1),
+        (x, i) => x * planeComponentPortable(p, i)),
+      lit(0.0), (acc, x) => acc + x)
 
   /** Engine-portable plane component: md5-derived pseudo-random in
     * [−1, 1), exact in double (8 hex chars < 2^32 ≤ 2^53). */
   private def planeComponentPortable(plane: Int, dim: Column): Column =
     conv(substring(md5(concat(lit(plane + "#"), dim.cast("string"))), 1, 8), 16, 10)
       .cast("double") / lit(4294967296.0) * 2.0 - 1.0
+
+  /** md5-plane signature over `v`: one sign bit per plane of its
+    * [[portableProjection]]. Shared by the portable LSH and near-dup
+    * paths. */
+  private def portableSignature(v: Column, planes: Int): Column =
+    (0 until planes).map { p =>
+      when(portableProjection(v, p) >= 0, shiftleft(lit(1L), p))
+        .otherwise(lit(0L))
+    }.reduce(_ bitwiseOR _)
 
   /**
    * Engine-portable hyperplane-LSH top-k: identical contract to
@@ -310,34 +316,9 @@ object Similarity {
    * bucketing itself under the exact oracle; [[lshTopK]] (native
    * codegen'd signature) remains the scale path.
    */
-  /** md5-plane signature over `v`: one sign bit per plane, projection as
-    * an explicit in-order fold so DuckDB's `list_reduce` replays it
-    * bit-identically. Shared by the portable LSH and near-dup paths. */
-  private def portableSignature(v: Column, planes: Int): Column =
-    (0 until planes).map { p =>
-      val proj = aggregate(
-        zip_with(v, sequence(lit(0), size(v) - 1),
-          (x, i) => x * planeComponentPortable(p, i)),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj >= 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
-    }.reduce(_ bitwiseOR _)
-
   def lshTopKPortable(df: DataFrame, idCol: String, vecCol: String,
-                      queryPred: Column, k: Int, planes: Int = 8): DataFrame = {
-    val base = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("n", norm2(col("v")))
-      .withColumn("bucket", portableSignature(col("v"), planes))
-    val q = base.filter(queryPred).alias("q")
-    val c = base.alias("c")
-    val scored = c.join(broadcast(q),
-        col("q.bucket") === col("c.bucket") && col("q.id") =!= col("c.id"))
-      .select(col("q.id").as("query_id"), col("c.id").as("neighbor_id"),
-        round(dot(col("q.v"), col("c.v")) / (col("q.n") * col("c.n")), 6).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rn"))
-  }
+                      queryPred: Column, k: Int, planes: Int = 8): DataFrame =
+    bucketTopK(df, idCol, vecCol, queryPred, k, portableSignature(_, planes))
 
   /**
    * IVF (inverted-file) approximate top-k: the second scale path besides
@@ -368,33 +349,9 @@ object Similarity {
   def ivfTopK(df: DataFrame, idCol: String, vecCol: String,
               queryPred: Column, k: Int,
               nCentroids: Int = 16, nProbe: Int = 4,
-              trainIters: Int = 0): DataFrame = {
-    val base = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("n", norm2(col("v")))
-    val cents = trainCentroids(base, resolveNCentroids(base, nCentroids), trainIters)
-    if (cents.isEmpty) return emptyTopK(base) // empty corpus: no quantizer
-    def centScores(v: Column, n: Column): Column =
-      centScoresFor(cents)(v, n)
-    val assigned = base.withColumn("cid",
-      -array_max(centScores(col("v"), col("n"))).getField("negcid"))
-    val probes = base.filter(queryPred)
-      .withColumn("c",
-        explode(slice(sort_array(centScores(col("v"), col("n")), asc = false),
-          1, nProbe)))
-      .select(col("id").as("query_id"), (-col("c.negcid")).as("cid"),
-        col("v").as("qv"), col("n").as("qn"))
-    // Candidate (query, neighbor) pairs are structurally unique — each
-    // corpus row has exactly one cid and a query's probe cids are distinct —
-    // so no dropDuplicates pass (and its exchange) is needed.
-    val cand = assigned.join(broadcast(probes), "cid")
-      .filter(col("query_id") =!= col("id"))
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        round(dot(col("qv"), col("v")) / (col("qn") * col("n")), 6).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    cand.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rn"))
-  }
+              trainIters: Int = 0): DataFrame =
+    ivfTopKWhere(df, idCol, vecCol, queryPred, lit(true), k, nCentroids,
+      nProbe, trainIters)
 
   /**
    * Filtered IVF top-k: [[ivfTopK]] with neighbors restricted to corpus
@@ -421,31 +378,32 @@ object Similarity {
                    queryPred: Column, corpusPred: Column, k: Int,
                    nCentroids: Int = 16, nProbe: Int = 4,
                    trainIters: Int = 0): DataFrame = {
-    val base = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("n", norm2(col("v")))
+    val base = prepVecs(df, idCol, vecCol)
     val cents = trainCentroids(base, resolveNCentroids(base, nCentroids), trainIters)
-    if (cents.isEmpty) return emptyTopK(base)
-    def centScores(v: Column, n: Column): Column = centScoresFor(cents)(v, n)
-    val assigned = df.filter(corpusPred)
-      .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("n", norm2(col("v")))
+    if (cents.isEmpty) return emptyTopK(base) // empty corpus: no quantizer
+    val assigned = prepVecs(df.filter(corpusPred), idCol, vecCol)
       .withColumn("cid",
-        -array_max(centScores(col("v"), col("n"))).getField("negcid"))
-    val probes = base.filter(queryPred)
-      .withColumn("c",
-        explode(slice(sort_array(centScores(col("v"), col("n")), asc = false),
-          1, nProbe)))
-      .select(col("id").as("query_id"), (-col("c.negcid")).as("cid"),
+        -array_max(centScoresFor(cents)(col("v"), col("n"))).getField("negcid"))
+    val probes = probeCells(base.filter(queryPred), cents, nProbe)
+      .select(col("id").as("query_id"), col("cid"),
         col("v").as("qv"), col("n").as("qn"))
-    val cand = assigned.join(broadcast(probes), "cid")
+    // Candidate (query, neighbor) pairs are structurally unique — each
+    // corpus row has exactly one cid and a query's probe cids are distinct —
+    // so no dropDuplicates pass (and its exchange) is needed.
+    rankTopK(assigned.join(broadcast(probes), "cid")
       .filter(col("query_id") =!= col("id"))
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        round(dot(col("qv"), col("v")) / (col("qn") * col("n")), 6).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    cand.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rn"))
+      .select(col("query_id"), col("id").as("neighbor_id"), rerankCos), k)
   }
+
+  /** `queries`' (id, v, n) rows exploded over their `nProbe` nearest
+    * cells (`cid`) — the probe side of every IVF search. */
+  private def probeCells(queries: DataFrame,
+                         cents: Array[(Long, Seq[Double], Double)],
+                         nProbe: Int): DataFrame =
+    queries.withColumn("c",
+        explode(slice(sort_array(centScoresFor(cents)(col("v"), col("n")),
+          asc = false), 1, nProbe)))
+      .withColumn("cid", -col("c.negcid"))
 
   /** `nCentroids = -1` auto-sizing: the √n rule, clamped to
     * [16, maxCells]. One count() job — only paid in auto mode; an
@@ -630,7 +588,7 @@ object Similarity {
   def savePqModel(model: PqModel, path: String,
                   spark: org.apache.spark.sql.SparkSession): Unit = {
     import spark.implicits._
-    model.cents.toSeq.toDF("cid", "cv", "cn")
+    centroidsToDF(model.cents, spark)
       .repartition(1).write.mode("overwrite").parquet(s"$path/centroids")
     model.books.zipWithIndex.flatMap { case (cws, j) =>
       cws.zipWithIndex.map { case (cw, c) => (j, c, cw) }
@@ -645,9 +603,7 @@ object Similarity {
   def loadPqModel(path: String,
                   spark: org.apache.spark.sql.SparkSession): PqModel = {
     import spark.implicits._
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select(col("cid").cast("long"), col("cv"), col("cn"))
-      .as[(Long, Seq[Double], Double)].collect().sortBy(_._1)
+    val cents = centroidsFromDF(spark.read.parquet(s"$path/centroids"))
     val books = spark.read.parquet(s"$path/codebooks")
       .select(col("j").cast("int"), col("c").cast("int"), col("cw"))
       .as[(Int, Int, Seq[Double])].collect()
@@ -667,17 +623,9 @@ object Similarity {
    */
   def buildPqIndex(df: DataFrame, idCol: String, vecCol: String,
                    nCentroids: Int = 16, m: Int = 8, kSub: Int = 16,
-                   trainIters: Int = 0, pqIters: Int = 1): (PqModel, DataFrame) = {
-    val base = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("n", norm2(col("v")))
-    val model = PqModel(
-      trainCentroids(base, resolveNCentroids(base, nCentroids), trainIters),
-      trainPqBooks(base, m, kSub, pqIters))
-    if (model.isEmpty) return (model, base.limit(0)
-      .select(col("id"), lit(0L).as("cid"),
-        typedlit(Seq.empty[Int]).as("codes"), lit(0.0).as("rn2")))
-    (model, encodePqIndex(model, df, idCol, vecCol))
-  }
+                   trainIters: Int = 0, pqIters: Int = 1): (PqModel, DataFrame) =
+    buildPqIndexWith(df, idCol, vecCol, Nil, nCentroids, m, kSub,
+      trainIters, pqIters)
 
   /**
    * Encode vectors against a FROZEN model: assign the coarse list and PQ
@@ -716,11 +664,7 @@ object Similarity {
     val spark = df.sparkSession
     df.select(col(idCol).as("id") +: col(vecCol).cast("array<double>").as("v")
         +: attrCols.map(col): _*)
-      .withColumn("cid",
-        org.apache.spark.sql.GraftColumnBridge.column(
-          graft.functions.CentroidArgmaxExpr(
-            org.apache.spark.sql.GraftColumnBridge.expression(col("v")),
-            centroidBroadcast(spark, model.cents))))
+      .withColumn("cid", centroidArgmax(spark, model.cents)(col("v")))
       .withColumn("codes", pqCodesNative(spark, model.books)(col("v")))
       .withColumn("rn2", pqReconNorm2For(model.books)(col("codes")))
       .select(col("id") +: col("cid") +: col("codes") +: col("rn2")
@@ -770,20 +714,14 @@ object Similarity {
                       idCol: String, vecCol: String): DataFrame = {
     require(!model.isEmpty, "cannot measure residuals against an empty model")
     val ds = model.dim / model.books.length
-    val enc = df
-      .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("n", norm2(col("v")))
+    val enc = prepVecs(df, idCol, vecCol)
       .filter(col("n") > 0)
       .withColumn("codes", pqCodesNative(df.sparkSession, model.books)(col("v")))
       .withColumn("rn2", pqReconNorm2For(model.books)(col("codes")))
       .withColumn("luts", pqLutsFor(model.books, ds)(col("v")))
-    val selfAdc = model.books.indices.map { j =>
-      element_at(element_at(col("luts"), j + 1),
-        element_at(col("codes"), j + 1) + 1)
-    }.reduce(_ + _)
     enc
       .withColumn("residual",
-        lit(1.0) - selfAdc / (col("n") * sqrt(col("rn2"))))
+        lit(1.0) - adcDot(model) / (col("n") * sqrt(col("rn2"))))
       .agg(count(lit(1)).as("n_vectors"),
         round(avg(col("residual")), 6).as("mean_residual"),
         round(max(col("residual")), 6).as("max_residual"))
@@ -924,43 +862,48 @@ object Similarity {
                     fullVectors: DataFrame, idCol: String, vecCol: String,
                     queryPred: Column, k: Int,
                     nProbe: Int = 4, rerankFactor: Int = 4): DataFrame = {
-    val base = fullVectors
-      .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("n", norm2(col("v")))
+    val base = prepVecs(fullVectors, idCol, vecCol)
     if (model.isEmpty) return emptyTopK(base)
-    val m = model.books.length
-    val ds = model.dim / m
     val queries = base.filter(queryPred)
-    val probes = queries
-      .withColumn("c",
-        explode(slice(sort_array(centScoresFor(model.cents)(col("v"), col("n")),
-          asc = false), 1, nProbe)))
-      .select(col("id").as("query_id"), (-col("c.negcid")).as("cid"),
+    val shortlist = pqShortlist(model, index, queries, k, nProbe, rerankFactor)
+    // Exact re-rank: map-only corpus pass against the broadcast shortlist.
+    rankTopK(base.join(broadcast(shortlist), col("id") === col("neighbor_id"))
+      .join(broadcast(querySide(queries)), "query_id")
+      .select(col("query_id"), col("neighbor_id"), rerankCos), k)
+  }
+
+  /** The probe → ADC → shortlist stage of every IVF-PQ search: the
+    * `k × rerankFactor` best (query_id, neighbor_id) pairs by ADC score
+    * in each query's `nProbe` cells (lookup tables built once per query
+    * on the broadcast side). */
+  private def pqShortlist(model: PqModel, index: DataFrame,
+                          queries: DataFrame, k: Int, nProbe: Int,
+                          rerankFactor: Int): DataFrame = {
+    val ds = model.dim / model.books.length
+    val probes = probeCells(queries, model.cents, nProbe)
+      .select(col("id").as("query_id"), col("cid"),
         col("n").as("qn"), pqLutsFor(model.books, ds)(col("v")).as("luts"))
-    val adc = model.books.indices.map { j =>
-      element_at(element_at(col("luts"), j + 1), element_at(col("codes"), j + 1) + 1)
-    }.reduce(_ + _)
     val candApprox = index.join(broadcast(probes), "cid")
       .filter(col("query_id") =!= col("id"))
       .select(col("query_id"), col("id").as("neighbor_id"),
-        (adc / (col("qn") * sqrt(col("rn2")))).as("acos"))
+        (adcDot(model) / (col("qn") * sqrt(col("rn2")))).as("acos"))
     val wA = Window.partitionBy(col("query_id"))
       .orderBy(col("acos").desc, col("neighbor_id").asc)
-    val shortlist = candApprox.withColumn("arn", row_number().over(wA))
+    candApprox.withColumn("arn", row_number().over(wA))
       .filter(col("arn") <= k.toLong * rerankFactor)
       .select(col("query_id"), col("neighbor_id"))
-    // Exact re-rank: map-only corpus pass against the broadcast shortlist.
-    val q2 = queries.select(col("id").as("query_id"),
-      col("v").as("qv"), col("n").as("qn"))
-    val rer = base.join(broadcast(shortlist), col("id") === col("neighbor_id"))
-      .join(broadcast(q2), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(dot(col("qv"), col("v")) / (col("qn") * col("n")), 6).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    rer.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rn"))
   }
+
+  /** ADC dot product of a row's `codes` against its `luts`: m lookups. */
+  private def adcDot(model: PqModel): Column =
+    model.books.indices.map { j =>
+      element_at(element_at(col("luts"), j + 1), element_at(col("codes"), j + 1) + 1)
+    }.reduce(_ + _)
+
+  /** The re-rank's query side: (query_id, qv, qn) from (id, v, n) rows. */
+  private def querySide(queries: DataFrame): DataFrame =
+    queries.select(col("id").as("query_id"), col("v").as("qv"),
+      col("n").as("qn"))
 
   /**
    * [[searchPqIndex]] for a SINGLE query id, with every read of the
@@ -987,44 +930,19 @@ object Similarity {
                               queryId: Long, k: Int,
                               nProbe: Int = 4,
                               rerankFactor: Int = 4): DataFrame = {
-    def pointRead(pred: Column): DataFrame = fullVectors
-      .filter(pred)
-      .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("n", norm2(col("v")))
+    def pointRead(pred: Column): DataFrame =
+      prepVecs(fullVectors.filter(pred), idCol, vecCol)
     val queries = pointRead(col(idCol) === queryId)
     if (model.isEmpty) return emptyTopK(queries)
-    val ds = model.dim / model.books.length
-    val probes = queries
-      .withColumn("c",
-        explode(slice(sort_array(centScoresFor(model.cents)(col("v"), col("n")),
-          asc = false), 1, nProbe)))
-      .select(col("id").as("query_id"), (-col("c.negcid")).as("cid"),
-        col("n").as("qn"), pqLutsFor(model.books, ds)(col("v")).as("luts"))
-    val adc = model.books.indices.map { j =>
-      element_at(element_at(col("luts"), j + 1), element_at(col("codes"), j + 1) + 1)
-    }.reduce(_ + _)
-    val candApprox = index.join(broadcast(probes), "cid")
-      .filter(col("query_id") =!= col("id"))
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        (adc / (col("qn") * sqrt(col("rn2")))).as("acos"))
-    val wA = Window.partitionBy(col("query_id"))
-      .orderBy(col("acos").desc, col("neighbor_id").asc)
     // bounded-model collect: ≤ k·rerankFactor ids, pushed back into the
     // vector scan as a point-IN predicate
-    val shortlistIds = candApprox.withColumn("arn", row_number().over(wA))
-      .filter(col("arn") <= k.toLong * rerankFactor)
+    val shortlistIds = pqShortlist(model, index, queries, k, nProbe,
+        rerankFactor)
       .select(col("neighbor_id")).collect().map(_.getLong(0)).toSeq
     if (shortlistIds.isEmpty) return emptyTopK(queries)
-    val q2 = queries.select(col("id").as("query_id"),
-      col("v").as("qv"), col("n").as("qn"))
-    val rer = pointRead(col(idCol).isin(shortlistIds: _*))
-      .crossJoin(broadcast(q2))
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        round(dot(col("qv"), col("v")) / (col("qn") * col("n")), 6).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    rer.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rn"))
+    rankTopK(pointRead(col(idCol).isin(shortlistIds: _*))
+      .crossJoin(broadcast(querySide(queries)))
+      .select(col("query_id"), col("id").as("neighbor_id"), rerankCos), k)
   }
 
   /**
@@ -1069,44 +987,14 @@ object Similarity {
                           rerankFactor: Int = 4): DataFrame = {
     val qids = queryIds
       .select(col(queryIds.columns.head).cast("long").as("qid")).distinct()
-    def rangedRead(bounds: Option[(Long, Long)]): DataFrame = {
-      val pre = bounds match {
-        case Some((lo, hi)) =>
-          fullVectors.filter(col(idCol) >= lo && col(idCol) <= hi)
-        case None => fullVectors
-      }
-      pre.select(col(idCol).as("id"),
-          col(vecCol).cast("array<double>").as("v"))
-        .withColumn("n", norm2(col("v")))
-    }
-    // constant-size driver data: one (min, max) pair per agg — the
-    // bounded-model tier (the trainCentroids precedent), NOT a data
-    // collect. None ⇔ the frame is empty.
-    def minMax(df: DataFrame, c: String): Option[(Long, Long)] =
-      df.agg(min(col(c)).as("lo"), max(col(c)).as("hi")).collect()
-        .headOption.filterNot(_.isNullAt(0))
-        .map(r => (r.getLong(0), r.getLong(1)))
+    def rangedRead(bounds: (Long, Long)): DataFrame = prepVecs(
+      fullVectors.filter(col(idCol) >= bounds._1 && col(idCol) <= bounds._2),
+      idCol, vecCol)
     val qBounds = minMax(qids, "qid")
     if (qBounds.isEmpty || model.isEmpty)
-      return emptyTopK(rangedRead(Some((0L, -1L))))
-    val queries = rangedRead(qBounds)
+      return emptyTopK(rangedRead((0L, -1L)))
+    val queries = rangedRead(qBounds.get)
       .join(broadcast(qids), col("id") === col("qid"), "left_semi")
-    val ds = model.dim / model.books.length
-    val probes = queries
-      .withColumn("c",
-        explode(slice(sort_array(centScoresFor(model.cents)(col("v"), col("n")),
-          asc = false), 1, nProbe)))
-      .select(col("id").as("query_id"), (-col("c.negcid")).as("cid"),
-        col("n").as("qn"), pqLutsFor(model.books, ds)(col("v")).as("luts"))
-    val adc = model.books.indices.map { j =>
-      element_at(element_at(col("luts"), j + 1), element_at(col("codes"), j + 1) + 1)
-    }.reduce(_ + _)
-    val candApprox = index.join(broadcast(probes), "cid")
-      .filter(col("query_id") =!= col("id"))
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        (adc / (col("qn") * sqrt(col("rn2")))).as("acos"))
-    val wA = Window.partitionBy(col("query_id"))
-      .orderBy(col("acos").desc, col("neighbor_id").asc)
     // compute-once shortlist: the min/max probe and the re-rank join
     // both read the checkpointed pairs, so the probe work runs exactly
     // one time and nothing shortlist-sized reaches the driver. LAZY
@@ -1115,24 +1003,23 @@ object Similarity {
     // checkpoint in ITS job — an eager checkpoint would run the whole
     // probe DAG as a separate job first and pay one more job barrier
     // per call for nothing.
-    val shortlist = candApprox.withColumn("arn", row_number().over(wA))
-      .filter(col("arn") <= k.toLong * rerankFactor)
-      .select(col("query_id"), col("neighbor_id"))
+    val shortlist = pqShortlist(model, index, queries, k, nProbe,
+        rerankFactor)
       .localCheckpoint(false)
     val nBounds = minMax(shortlist, "neighbor_id")
     if (nBounds.isEmpty) return emptyTopK(queries)
-    val q2 = queries.select(col("id").as("query_id"),
-      col("v").as("qv"), col("n").as("qn"))
-    val rer = rangedRead(nBounds)
+    rankTopK(rangedRead(nBounds.get)
       .join(broadcast(shortlist), col("id") === col("neighbor_id"))
-      .join(broadcast(q2), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(dot(col("qv"), col("v")) / (col("qn") * col("n")), 6).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    rer.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rn"))
+      .join(broadcast(querySide(queries)), "query_id")
+      .select(col("query_id"), col("neighbor_id"), rerankCos), k)
   }
+
+  /** (min, max) of a long column, None for an empty frame — one agg of
+    * constant-size driver data (the bounded-model tier). */
+  private[operators] def minMax(df: DataFrame, c: String): Option[(Long, Long)] =
+    df.agg(min(col(c)).as("lo"), max(col(c)).as("hi")).collect()
+      .headOption.filterNot(_.isNullAt(0))
+      .map(r => (r.getLong(0), r.getLong(1)))
 
   /**
    * Late-interaction (ColBERT-style) MaxSim retrieval, exact form (r16;
@@ -1163,10 +1050,7 @@ object Similarity {
                  vecCol: String, queryTokenPred: Column,
                  k: Int): DataFrame = {
     require(k > 0, "maxSimTopK needs positive k")
-    val base = vectors.select(col(docIdCol).cast("long").as("doc_id"),
-        col(vecIdCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("v"))
-      .withColumn("n", norm2(col("v")))
+    val base = tokenVecs(vectors, docIdCol, vecIdCol, vecCol)
     val q = base.filter(queryTokenPred)
     val qDocs = q.select(col("doc_id")).distinct()
     val corpus = base.join(broadcast(qDocs), Seq("doc_id"), "left_anti")
@@ -1201,10 +1085,7 @@ object Similarity {
                         kTok: Int = 50, nProbe: Int = 4,
                         rerankFactor: Int = 4): DataFrame = {
     require(k > 0 && kTok > 0, "maxSimTopKIndexed needs positive k")
-    val base = vectors.select(col(docIdCol).cast("long").as("doc_id"),
-        col(vecIdCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("v"))
-      .withColumn("n", norm2(col("v")))
+    val base = tokenVecs(vectors, docIdCol, vecIdCol, vecCol)
     val q = base.filter(queryTokenPred)
     val emptyOut = maxSimScoreTail(base.filter(lit(false)),
       q.filter(lit(false)), k)
@@ -1221,9 +1102,7 @@ object Similarity {
     // neighbor tokens → their documents: a range-pruned 2-column read of
     // the token→doc mapping refined by the broadcast shortlist (≤
     // nQTok·kTok ids) — never a corpus-wide unfiltered pass
-    val nb = shortlist.agg(min(col("neighbor_id")).as("lo"),
-        max(col("neighbor_id")).as("hi")).collect().headOption
-      .filterNot(_.isNullAt(0)).map(r => (r.getLong(0), r.getLong(1)))
+    val nb = minMax(shortlist, "neighbor_id")
     if (nb.isEmpty) return emptyOut
     val qDocs = q.select(col("doc_id")).distinct()
     val candDocs = base
@@ -1232,9 +1111,7 @@ object Similarity {
         "left_semi")
       .select(col("doc_id")).distinct()
       .join(broadcast(qDocs), Seq("doc_id"), "left_anti")
-    val db = candDocs.agg(min(col("doc_id")).as("lo"),
-        max(col("doc_id")).as("hi")).collect().headOption
-      .filterNot(_.isNullAt(0)).map(r => (r.getLong(0), r.getLong(1)))
+    val db = minMax(candDocs, "doc_id")
     if (db.isEmpty) return emptyOut
     val corpus = base
       .filter(col("doc_id") >= db.get._1 && col("doc_id") <= db.get._2)
@@ -1260,10 +1137,7 @@ object Similarity {
                       vecIdCol: String, vecCol: String,
                       queryDocIds: DataFrame, k: Int): DataFrame = {
     require(k > 0, "maxSimTopKBatch needs positive k")
-    val base = vectors.select(col(docIdCol).cast("long").as("doc_id"),
-        col(vecIdCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("v"))
-      .withColumn("n", norm2(col("v")))
+    val base = tokenVecs(vectors, docIdCol, vecIdCol, vecCol)
     maxSimBatchTail(base, batchQueryBags(base, queryDocIds), k)
   }
 
@@ -1286,10 +1160,7 @@ object Similarity {
                              kTok: Int = 50, nProbe: Int = 4,
                              rerankFactor: Int = 4): DataFrame = {
     require(k > 0 && kTok > 0, "maxSimTopKIndexedBatch needs positive k")
-    val base = vectors.select(col(docIdCol).cast("long").as("doc_id"),
-        col(vecIdCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("v"))
-      .withColumn("n", norm2(col("v")))
+    val base = tokenVecs(vectors, docIdCol, vecIdCol, vecCol)
     val q = batchQueryBags(base, queryDocIds)
     val emptyOut = maxSimBatchTail(base.filter(lit(false)),
       q.filter(lit(false)), k)
@@ -1303,9 +1174,7 @@ object Similarity {
         rerankFactor = rerankFactor)
       .select(col("query_id").as("qid"), col("neighbor_id"))
       .localCheckpoint(false)
-    val nb = short.agg(min(col("neighbor_id")).as("lo"),
-        max(col("neighbor_id")).as("hi")).collect().headOption
-      .filterNot(_.isNullAt(0)).map(r => (r.getLong(0), r.getLong(1)))
+    val nb = minMax(short, "neighbor_id")
     if (nb.isEmpty) return emptyOut
     // neighbor token → its doc (range-pruned mapping read), shortlist
     // pair → voting query token → its qdoc (both broadcast-bounded):
@@ -1318,9 +1187,7 @@ object Similarity {
       .filter(col("cdoc") =!= col("qdoc"))
       .select(col("qdoc"), col("cdoc").as("doc_id")).distinct()
       .localCheckpoint(false)
-    val db = pairs.agg(min(col("doc_id")).as("lo"),
-        max(col("doc_id")).as("hi")).collect().headOption
-      .filterNot(_.isNullAt(0)).map(r => (r.getLong(0), r.getLong(1)))
+    val db = minMax(pairs, "doc_id")
     if (db.isEmpty) return emptyOut
     val corpus = base
       .filter(col("doc_id") >= db.get._1 && col("doc_id") <= db.get._2)
@@ -1328,6 +1195,14 @@ object Similarity {
         Seq("doc_id"), "left_semi")
     maxSimBatchTail(corpus, q, k, pairFilter = Some(pairs))
   }
+
+  /** (doc_id, id, v, n) token rows of a late-interaction vector table. */
+  private def tokenVecs(vectors: DataFrame, docIdCol: String,
+                        vecIdCol: String, vecCol: String): DataFrame =
+    vectors.select(col(docIdCol).cast("long").as("doc_id"),
+        col(vecIdCol).cast("long").as("id"),
+        col(vecCol).cast("array<double>").as("v"))
+      .withColumn("n", norm2(col("v")))
 
   /** Each query doc's bag = its own token rows: the doc-id batch frame
     * (first column, distinct) broadcast-joined back into the token
@@ -1362,9 +1237,7 @@ object Similarity {
       .agg(max(col("cos")).as("m"))
     val sc = perTok.groupBy(col("qdoc"), col("doc_id"))
       .agg(round(sum(col("m")), 6).as("score"))
-    val w = Window.partitionBy(col("qdoc"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-    sc.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+    rankWithin(sc, "qdoc", "score", "doc_id", k)
       .select(col("qdoc").as("query_id"), col("doc_id"), col("score"),
         col("rn"))
   }
@@ -1385,9 +1258,7 @@ object Similarity {
       .groupBy(col("doc_id"), col("qid")).agg(max(col("cos")).as("m"))
     val sc = perTok.groupBy(col("doc_id"))
       .agg(round(sum(col("m")), 6).as("score"))
-    val w = Window.orderBy(col("score").desc, col("doc_id").asc)
-    sc.orderBy(col("score").desc, col("doc_id").asc).limit(k)
-      .withColumn("rn", row_number().over(w))
+    takeTopK(sc, "score", "doc_id", k)
       .select(col("doc_id"), col("score"), col("rn"))
   }
 
@@ -1488,7 +1359,6 @@ object Similarity {
                     rerankFactor: Int = 4): DataFrame = {
     val (model, index) = buildPqIndexWith(df, idCol, vecCol, attrCols,
       nCentroids, m, kSub, trainIters, pqIters)
-    if (model.isEmpty) return emptyTopK(prepVecs(df, idCol, vecCol))
     searchPqIndex(model, index.filter(indexPred),
       df, idCol, vecCol, queryPred, k, nProbe, rerankFactor)
   }
@@ -1546,10 +1416,16 @@ object Similarity {
     * so precision is exact and only recall is approximate. */
   def cosineNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                          tau: Double, leftPred: Column,
-                         planes: Int = 6): DataFrame = {
-    val base = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("n", norm2(col("v")))
-      .withColumn("bucket", lshSignature(col("v"), planes))
+                         planes: Int = 6): DataFrame =
+    bucketNearDupPairs(df, idCol, vecCol, tau, leftPred, lshSignature(_, planes))
+
+  /** The one body of [[cosineNearDupPairs]] and
+    * [[cosineNearDupPairsPortable]] (see [[bucketTopK]]). */
+  private def bucketNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
+                                 tau: Double, leftPred: Column,
+                                 bucketOf: Column => Column): DataFrame = {
+    val base = prepVecs(df, idCol, vecCol)
+      .withColumn("bucket", bucketOf(col("v")))
     val a = base.filter(leftPred).alias("a")
     val b = base.alias("b")
     b.join(broadcast(a),
@@ -1569,19 +1445,9 @@ object Similarity {
    */
   def cosineNearDupPairsPortable(df: DataFrame, idCol: String, vecCol: String,
                                  tau: Double, leftPred: Column,
-                                 planes: Int = 6): DataFrame = {
-    val base = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("n", norm2(col("v")))
-      .withColumn("bucket", portableSignature(col("v"), planes))
-    val a = base.filter(leftPred).alias("a")
-    val b = base.alias("b")
-    b.join(broadcast(a),
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        (dot(col("a.v"), col("b.v")) / (col("a.n") * col("b.n"))).as("cos"))
-      .filter(round(col("cos"), 6) >= tau)
-      .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
-  }
+                                 planes: Int = 6): DataFrame =
+    bucketNearDupPairs(df, idCol, vecCol, tau, leftPred,
+      portableSignature(_, planes))
 
   /**
    * SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -1659,12 +1525,9 @@ object Similarity {
   def assignToQuantizerBroadcast(df: DataFrame, idCol: String, vecCol: String,
                                  cents: Array[(Long, Seq[Double], Double)]): DataFrame = {
     require(cents.nonEmpty, "cannot assign against an empty quantizer")
-    val bc = centroidBroadcast(df.sparkSession, cents)
     df.select(col(idCol), col(vecCol),
-      org.apache.spark.sql.GraftColumnBridge.column(
-        graft.functions.CentroidArgmaxExpr(
-          org.apache.spark.sql.GraftColumnBridge.expression(
-            col(vecCol).cast("array<double>")), bc)).as("cid"))
+      centroidArgmax(df.sparkSession, cents)(
+        col(vecCol).cast("array<double>")).as("cid"))
   }
 
   /** Per-model TorrentBroadcast memo (ADVICE r10): a long-lived streaming
@@ -1677,45 +1540,42 @@ object Similarity {
     * hit from a DIFFERENT (e.g. restarted) SparkContext is rebuilt, not
     * reused. */
   private val centroidBroadcasts =
-    new java.util.WeakHashMap[Array[(Long, Seq[Double], Double)],
-      (org.apache.spark.SparkContext,
-        org.apache.spark.broadcast.Broadcast[graft.functions.CentroidSet])]()
-
-  private def centroidBroadcast(spark: org.apache.spark.sql.SparkSession,
-      cents: Array[(Long, Seq[Double], Double)])
-      : org.apache.spark.broadcast.Broadcast[graft.functions.CentroidSet] =
-    centroidBroadcasts.synchronized {
-      val sc = spark.sparkContext
-      val hit = centroidBroadcasts.get(cents)
-      if (hit != null && (hit._1 eq sc) && !sc.isStopped) hit._2
-      else {
-        val bc = sc.broadcast(graft.functions.CentroidSet(cents))
-        centroidBroadcasts.put(cents, (sc, bc))
-        bc
-      }
-    }
+    new BroadcastMemo[Array[(Long, Seq[Double], Double)],
+      graft.functions.CentroidSet]()
 
   /** [[centroidBroadcasts]]' twin for the PQ codebooks (same keying,
     * same lifecycle): one TorrentBroadcast per frozen book array per
     * context, released when the model is dropped. */
   private val pqBookBroadcasts =
-    new java.util.WeakHashMap[Array[Array[Seq[Double]]],
-      (org.apache.spark.SparkContext,
-        org.apache.spark.broadcast.Broadcast[graft.functions.PqBookSet])]()
+    new BroadcastMemo[Array[Array[Seq[Double]]], graft.functions.PqBookSet]()
 
-  private def pqBookBroadcast(spark: org.apache.spark.sql.SparkSession,
-      books: Array[Array[Seq[Double]]])
-      : org.apache.spark.broadcast.Broadcast[graft.functions.PqBookSet] =
-    pqBookBroadcasts.synchronized {
+  private type BroadcastMemo[K, V] =
+    java.util.WeakHashMap[K, (org.apache.spark.SparkContext, Broadcast[V])]
+
+  /** The memoized broadcast of `key`'s `value` in `spark`'s context. */
+  private def memoBroadcast[K, V: scala.reflect.ClassTag](
+      memo: BroadcastMemo[K, V], spark: org.apache.spark.sql.SparkSession,
+      key: K)(value: => V): Broadcast[V] =
+    memo.synchronized {
       val sc = spark.sparkContext
-      val hit = pqBookBroadcasts.get(books)
+      val hit = memo.get(key)
       if (hit != null && (hit._1 eq sc) && !sc.isStopped) hit._2
       else {
-        val bc = sc.broadcast(graft.functions.PqBookSet(books))
-        pqBookBroadcasts.put(books, (sc, bc))
+        val bc = sc.broadcast(value)
+        memo.put(key, (sc, bc))
         bc
       }
     }
+
+  /** Native broadcast-codebook coarse assignment — bit-equivalent to the
+    * literal `centScoresFor` argmax, ties included (spec-pinned). */
+  private def centroidArgmax(spark: org.apache.spark.sql.SparkSession,
+      cents: Array[(Long, Seq[Double], Double)])(v: Column): Column =
+    org.apache.spark.sql.GraftColumnBridge.column(
+      graft.functions.CentroidArgmaxExpr(
+        org.apache.spark.sql.GraftColumnBridge.expression(v),
+        memoBroadcast(centroidBroadcasts, spark, cents)(
+          graft.functions.CentroidSet(cents))))
 
   /** Native broadcast-codebook PQ encode — bit-equivalent to
     * `pqCodesFor(books, ds)` (spec-pinned in SimilaritySpec); the
@@ -1726,7 +1586,8 @@ object Similarity {
     org.apache.spark.sql.GraftColumnBridge.column(
       graft.functions.PqCodesExpr(
         org.apache.spark.sql.GraftColumnBridge.expression(v),
-        pqBookBroadcast(spark, books)))
+        memoBroadcast(pqBookBroadcasts, spark, books)(
+          graft.functions.PqBookSet(books))))
 
   /** The deterministic coarse quantizer as a standalone, persistable
     * model: the same lowest-id sample (+ optional Lloyd rounds) the IVF
@@ -1784,10 +1645,7 @@ object Similarity {
       prepped: DataFrame): DataFrame =
     if (cents.length > literalCellLimit)
       prepped.withColumn("cid",
-        org.apache.spark.sql.GraftColumnBridge.column(
-          graft.functions.CentroidArgmaxExpr(
-            org.apache.spark.sql.GraftColumnBridge.expression(col("v")),
-            centroidBroadcast(prepped.sparkSession, cents))))
+        centroidArgmax(prepped.sparkSession, cents)(col("v")))
     else
       prepped.withColumn("cid",
         -array_max(centScoresFor(cents)(col("v"), col("n"))).getField("negcid"))
@@ -2041,12 +1899,10 @@ object Similarity {
                   sort_array(centScoresFor(cents)(col("v"), col("n")),
                     asc = false), 1, topCells)))
                 .withColumn("cid", -col("cc.negcid")).drop("cc")
-            val probes = b
-              .withColumn("c", explode(slice(
-                sort_array(centScoresFor(cents)(col("v"), col("n")),
-                  asc = false), 1, math.min(cellProbes, cents.length))))
-              .select((-col("c.negcid")).as("cid"), col("id").as("bid"),
-                col("v").as("bv"), col("n").as("bn"))
+            val probes =
+              probeCells(b, cents, math.min(cellProbes, cents.length))
+                .select(col("cid"), col("id").as("bid"),
+                  col("v").as("bv"), col("n").as("bn"))
             val raw = assigned.join(broadcast(probes), Seq("cid"))
               .filter(pairCos >= tau)
             if (topCells == 1)

@@ -250,7 +250,7 @@ class PlanScaleInvariantsSpec extends SparkSuite {
     // VERDICT r13 #5: binsByAt/clampByAt relied on the PLANNER to
     // broadcast the one-row-per-group cuts frame — a courtesy the size
     // estimate could withdraw, silently re-shuffling the corpus. The
-    // r14 `broadcastCuts` hint makes it a contract; under the
+    // r14 explicit broadcast hint makes it a contract; under the
     // no-auto-broadcast regime these pins prove the hint (not the
     // threshold) carries the join.
     def grouped(n: Int): DataFrame = {

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -9,6 +10,23 @@ import graft.SparkSuite
 class SimilaritySpec extends SparkSuite {
 
   import spark.implicits._
+
+  /** The declarative fold — the bit-parity reference for the native
+    * [[Similarity.dot]]. */
+  private def dotHof(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
+
+  /** Declarative HOF signature — the bit-parity reference for the native
+    * [[Similarity.lshSignature]]. Plane component (p, i) is xxhash64 of
+    * the pair scaled to [-1, 1). */
+  private def lshSignatureHof(v: Column, planes: Int): Column =
+    (0 until planes).map { p =>
+      val proj = aggregate(
+        zip_with(v, sequence(lit(0), size(v) - 1), (x, i) =>
+          x * (xxhash64(lit(p), i).cast("double") / lit(Long.MaxValue.toDouble))),
+        lit(0.0), (acc, x) => acc + x)
+      when(proj >= 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
+    }.reduce(_ bitwiseOR _)
 
   // 4-dim toy corpus: v1≈v2 (cos≈0.998), v3 orthogonal-ish, v4 negated
   private lazy val vecs = Seq(
@@ -220,9 +238,9 @@ class SimilaritySpec extends SparkSuite {
       expr("transform(sequence(0, 15), i -> cast(xxhash64(id, i) as double) / 9.2e18)").as("v"))
     val both = wide.select(
       Similarity.dot(col("v"), col("v")).as("d_native"),
-      Similarity.dotHof(col("v"), col("v")).as("d_hof"),
+      dotHof(col("v"), col("v")).as("d_hof"),
       Similarity.lshSignature(col("v"), 8).as("b_native"),
-      Similarity.lshSignatureHof(col("v"), 8).as("b_hof"))
+      lshSignatureHof(col("v"), 8).as("b_hof"))
     val rows = both.as[(Double, Double, Long, Long)].collect()
     rows.foreach { case (dn, dh, bn, bh) =>
       assert(dn === dh, "dot must fold in identical order → bit-equal")
