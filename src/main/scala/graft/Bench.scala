@@ -1,4 +1,7 @@
 package graft
+
+import scala.util.control.NonFatal
+
 object Bench {
 
   /**
@@ -72,10 +75,14 @@ object Bench {
         "importance_weights", "sim_ivfpq_topk", "sim_ivfpq_search",
         "hybrid_search_ann", "bm25_search_appended",
         "bm25_search_compacted").foreach { q =>
+      // a warm-up failure is reported here; the timed passes still run
+      // the gate and record it as -1
       try SparkEntry.queries.get(q).foreach(_(spark, sfDir).count())
-      catch { case _: Throwable => }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] warm-up $q failed: ${e.getClass.getName}: ${e.getMessage}")
+      }
     }
-    // Optional comma-separated filter for family-targeted soaks (e.g.
+    // Optional comma-separated filter for family-targeted runs (e.g.
     // SPARK_GRAFT_QUERIES=sim_ivf_topk,sim_ivfpq_topk against a dir that
     // only holds the embeddings table); unset = the full registry.
     val wanted = sys.env.get("SPARK_GRAFT_QUERIES")

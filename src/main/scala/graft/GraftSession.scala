@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   * bigint (Catalog derives integer event time from it) — without it every
   * events query throws PARQUET_TYPE_ILLEGAL.
   *
-  * `conf` carries the settings only one caller needs (SoakAudit's
+  * `conf` carries the settings only one caller needs (the scale audit's
   * `spark.rdd.compress`, the test session's AQE-off); it is applied last,
   * so `spark.master` there overrides the local master (Run's
   * `SPARK_MASTER`). `getOrCreate` semantics: an already-running session

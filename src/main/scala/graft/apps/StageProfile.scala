@@ -4,14 +4,14 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
-/** Dev tool: per-stage breakdown of ONE registry/soak query — the
+/** Dev tool: per-stage breakdown of ONE gate — the
   * drill-down a stage-level optimization needs before touching code
   * (guide §1: decide whether the time is shuffle read, executor compute,
   * scheduling, or GC, then optimize that one thing).
   *
-  *   runMain graft.apps.StageProfile <sfDir> <query> [reps]
+  *   runMain graft.apps.StageProfile <sfDir> <gate> [reps]
   *
-  * Runs the query once untimed (codegen + footer warmup, index builds),
+  * Runs the gate once untimed (codegen + footer warmup, index builds),
   * then `reps` timed runs (default 2); prints for every stage of the
   * LAST run: wall duration, summed executor run/CPU/GC time, shuffle
   * read/write bytes, task count and name. The gap between wall and
@@ -22,7 +22,7 @@ object StageProfile {
     val Array(dir, name) = args.take(2)
     val reps = args.lift(2).flatMap(_.toIntOption).getOrElse(2)
     val spark = graft.GraftSession.local()
-    val fn = SoakAudit.registry(name)
+    val fn = graft.SparkEntry.queries(name)
     // warmup: codegen, parquet footers, any first-call index persist
     fn(spark, dir).count()
 

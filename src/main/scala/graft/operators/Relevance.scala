@@ -841,7 +841,7 @@ object Relevance {
   /** [[cosinePairs]] with the prefix filter switchable — `false` keeps
     * the full postings⋈postings candidate join. Output is identical by
     * the Bayardo guarantee (spec-pinned equality); only the candidate
-    * volume differs. Exposed for the equality spec and for A/B soaks. */
+    * volume differs. Exposed for the equality spec. */
   private[graft] def cosinePairsImpl(docs: DataFrame, idCol: String,
                                      textCol: String, tau: Double,
                                      maxDf: Long,
@@ -1173,14 +1173,14 @@ object Relevance {
   /** [[cosinePairsIncremental]] with the prefix filter switchable —
     * `false` keeps the full postings⋈postings joins. Output is identical
     * by the one-sided Bayardo guarantee (spec-pinned equality); only the
-    * candidate volume differs. Exposed for the equality spec and A/B
-    * soaks, mirroring [[cosinePairsImpl]]. The default policy is the
+    * candidate volume differs. Exposed for the equality spec,
+    * mirroring [[cosinePairsImpl]]. The default policy is the
     * batch lever rule (prefix iff uncapped): when `maxDf` binds it has
     * already dropped the hot postings the prefix would absorb, and
     * stacking measured as pure overhead (r13).
     *
     * Prefix mechanics (r14, closing the r13 gap this operator's own
-    * IngestBench row measured at 202 s/batch): the Bayardo argument is
+    * ingest-bench row measured at 202 s/batch, PLANS.md r13): the Bayardo argument is
     * ONE-SIDED — a qualifying pair must share a term INDEXED by its
     * designated side, so only one side of each join needs the split.
     *  - cross (incoming × store): the STORE side is designated; its

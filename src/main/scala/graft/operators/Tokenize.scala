@@ -158,9 +158,9 @@ object Tokenize {
     // whenever the vocab fits: a 128 GiB driver holds ~28M words of 8
     // chars, 7× the old 4M-row cap). localVocabThreshold = -1 (default)
     // means "byte gate decides"; an explicit value adds a row cap on top
-    // (0 forces the distributed path — soaks and equivalence specs use
-    // it). Either gate failing falls back to the distributed learner,
-    // which never collects the vocab.
+    // (0 forces the distributed path — the equivalence specs use it).
+    // Either gate failing falls back to the distributed learner, which
+    // never collects the vocab.
     val underRowGate = localVocabThreshold < 0L ||
       words.limit(math.min(localVocabThreshold, Int.MaxValue - 1L).toInt + 1)
         .count() <= localVocabThreshold

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
 import graft.operators._
 import graft.sources.Tables
 
@@ -1140,25 +1141,18 @@ object PipelineCatalog {
     * [[Similarity.ivfPqTopKWhere]]'s scaladoc prescribes for fixed
     * attributes. */
   val simIvfPqAttrDet: Q = (s, dir) => {
-    val key = s.sparkContext.applicationId + "|" + dir
-    val (model, path) = pqAttrIndexCache.computeIfAbsent(key, _ => {
+    val (model, path) = Scratch.once(s, "pq_attr_idx", dir) { p =>
       val (mdl, idx) = Similarity.buildPqIndexWith(
         Tables.embeddings(s, dir), "vec_id", "embedding", Seq("label"),
         nCentroids = 16, m = 8, kSub = 16, trainIters = 0, pqIters = 0)
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_pq_attr_idx").toString
       idx.write.mode("overwrite").parquet(p)
       (mdl, p)
-    })
+    }
     Similarity.searchPqIndex(model,
       s.read.parquet(path).filter(col("label") === 3),
       Tables.embeddings(s, dir), "vec_id", "embedding",
       col("id") % 100 === 0, k = 5, nProbe = 4, rerankFactor = 4)
   }
-
-  private val pqAttrIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (Similarity.PqModel, String)]()
 
   /** Session-lifetime IVF-PQ index cache keyed by (application, sfDir):
     * the build half of [[Similarity.ivfPqTopK]] runs ONCE per corpus and
@@ -2614,20 +2608,13 @@ object PipelineCatalog {
     * gate that exercises the index-bound serving path. */
   private def detPqIndex(s: org.apache.spark.sql.SparkSession,
                          dir: String): (Similarity.PqModel, String) =
-    pqDetIndexCache.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + dir, _ => {
-        val (mdl, idx) = Similarity.buildPqIndex(Tables.embeddings(s, dir),
-          "vec_id", "embedding", nCentroids = 16, m = 8, kSub = 16,
-          trainIters = 0, pqIters = 0)
-        val p = java.nio.file.Files
-          .createTempDirectory("graft_pq_det_idx").toString
-        idx.write.mode("overwrite").parquet(p)
-        (mdl, p)
-      })
-
-  private val pqDetIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (Similarity.PqModel, String)]()
+    Scratch.once(s, "pq_det_idx", dir) { p =>
+      val (mdl, idx) = Similarity.buildPqIndex(Tables.embeddings(s, dir),
+        "vec_id", "embedding", nCentroids = 16, m = 8, kSub = 16,
+        trainIters = 0, pqIters = 0)
+      idx.write.mode("overwrite").parquet(p)
+      (mdl, p)
+    }
 
   val hybridSearchSql: String =
     """WITH dl AS (
@@ -2903,15 +2890,15 @@ object PipelineCatalog {
     // a pure fraction it cost 402 s at sf1 (the plain-replica corpus
     // hands every doc ~10 verbatim twins — ~7M ≥ tau pairs, all real
     // output). `doc_id < 1250` pins the gate to a quarter of the sf0.01 id
-    // range (the soak_minhash_inc fixed-slice precedent): identical
-    // gate at sf0.01/sf0.1, constant cost at any factor. r15 cut the
+    // range (the fixed-slice precedent of the r9 minhash ingest soak):
+    // identical gate at sf0.01/sf0.1, constant cost at any factor. r15 cut the
     // r14 slice 4× (5000 → 1250, VERDICT r14 #3): bit-exactness of the
     // prefix path is slice-size-independent; at 5000 the gate alone
     // cost 52 s of the sf0.1 driver registry, and at 2500 it still
     // measured ~12 s — the cost is store-build-dominated, so the slice
     // must shrink past the quadratic regime to move. The family's
-    // corpus-scaling story lives in IngestBench cosine modes and the
-    // APSS soak ladder, on corpus shapes that are actually long-tail.
+    // corpus-scaling story is the r13/r14 ingest-bench and APSS soak
+    // figures in PLANS.md, on corpus shapes that are actually long-tail.
     // narrow-width scope (r16, VERDICT r15 #2): the fixed-1250-doc slice
     // makes this gate STAGE-BOUND — ~38 stages over 2.7 MB of shuffle,
     // and on this box a stage costs ~0.15-0.25 s of pure fixed latency
@@ -2933,29 +2920,23 @@ object PipelineCatalog {
     // by the bit-reproducibility contract (term-sorted in-order folds),
     // doubles round-trip parquet bit-exactly, and the gate stays
     // certified by the same end-to-end DuckDB replay. The OPERATOR
-    // keeps full width everywhere real data flows (IngestBench, the
-    // APSS soak ladder, the capped/batch gates — the capped gate's
-    // inline store build keeps the build cost visible).
+    // keeps full width everywhere real data flows (the capped/batch
+    // gates — the capped gate's inline store build keeps the build cost
+    // visible).
     val ns = narrowSession(s, width = 4)
-    val key = ns.sparkContext.applicationId + "|" + dir
-    val storePath = cosStorePaths.computeIfAbsent(key, _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_cos_store").toString
+    val storePath = Scratch.once(ns, "cos_store", dir) { p =>
       val corpus = Tables.documents(ns, dir)
         .filter(col("doc_id") < 1250L && col("doc_id") % 16 === 0)
       Relevance.cosineStore(corpus, "doc_id", "text")
         .write.mode("overwrite").parquet(p)
       p
-    })
+    }
     val incoming = Tables.documents(ns, dir)
       .filter(col("doc_id") < 1250L && col("doc_id") % 16 === 2)
       .withColumn("doc_id", col("doc_id") + lit(10000000L))
     Relevance.cosinePairsIncremental(incoming, ns.read.parquet(storePath),
       "doc_id", "text", tau = 0.6)
   }
-
-  private val cosStorePaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** A cloned session (shared SparkContext, OWN SQL conf) pinned to a
     * narrow shuffle width with AQE off and a wide broadcast threshold —
@@ -3012,16 +2993,10 @@ object PipelineCatalog {
     * sfDir) — one build serves every indexed-read gate. */
   private def bm25IdxPath(s: org.apache.spark.sql.SparkSession,
                           dir: String): String =
-    bm25IndexPaths.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + dir, _ => {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft_bm25_idx").toString
-        Relevance.bm25Index(Tables.documents(s, dir), "doc_id", "text", p)
-        p
-      })
-
-  private val bm25IndexPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    Scratch.once(s, "bm25_idx", dir) { p =>
+      Relevance.bm25Index(Tables.documents(s, dir), "doc_id", "text", p)
+      p
+    }
 
   /** Exact index growth (r13): the index is built over HALF the corpus
     * and the other half APPENDED ([[Relevance.bm25IndexAppend]] — BM25's
@@ -3030,17 +3005,14 @@ object PipelineCatalog {
     * SAME full-corpus oracle as [[bm25SearchQ]]: passing means the
     * append left no seam. */
   val bm25SearchAppendedQ: Q = (s, dir) => {
-    val key = s.sparkContext.applicationId + "|appended|" + dir
-    val path = bm25IndexPaths.computeIfAbsent(key, _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_bm25_app").toString
+    val path = Scratch.once(s, "bm25_app", dir) { p =>
       val docs = Tables.documents(s, dir)
       Relevance.bm25Index(docs.filter(col("doc_id") % 2 === 0),
         "doc_id", "text", p)
       Relevance.bm25IndexAppend(s, p,
         docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", "half2")
       p
-    })
+    }
     Relevance.bm25SearchIndexed(s, path, "dup vector key", k = 10)
   }
 
@@ -3052,10 +3024,7 @@ object PipelineCatalog {
     * answer (the postings row set is the invariant; df and scores
     * derive from it at query time). */
   val bm25SearchCompactedQ: Q = (s, dir) => {
-    val key = s.sparkContext.applicationId + "|compacted|" + dir
-    val path = bm25IndexPaths.computeIfAbsent(key, _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_bm25_cmp").toString
+    val path = Scratch.once(s, "bm25_cmp", dir) { p =>
       val docs = Tables.documents(s, dir)
       Relevance.bm25Index(docs.filter(col("doc_id") % 3 === 0),
         "doc_id", "text", p)
@@ -3067,7 +3036,7 @@ object PipelineCatalog {
       require(Relevance.bm25IndexDirs(s, p).length == 1,
         "compaction must leave one directory")
       p
-    })
+    }
     Relevance.bm25SearchIndexed(s, path, "dup vector key", k = 10)
   }
 

@@ -87,10 +87,10 @@ class PlanScaleInvariantsSpec extends SparkSuite {
   // ---- measurement harness ---------------------------------------------
 
   /** Total (shuffles, broadcasts, actions) across the EXECUTED plan of
-    * every action — the shared SoakAudit harness (AQE-final plans via
+    * every action — the shared PlanShapes harness (AQE-final plans via
     * QueryExecutionListener, bus drained before reading). */
   private def actionShapes(f: => Unit): (Int, Int, Int) =
-    graft.apps.SoakAudit.actionShapes(spark)(f)
+    graft.plans.PlanShapes.actionShapes(spark)(f)
 
   /** Run `f` with every auto-broadcast threshold disabled — the planner
     * grants ONLY explicit broadcast hints, simulating corpus sides that

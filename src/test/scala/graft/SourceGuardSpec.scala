@@ -6,14 +6,16 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-level guard for three "one way to do it" rules:
+/** Source-level guard for four "one way to do it" rules:
   *  - sessions are built only by [[GraftSession]] (no other session
   *    builder chain in `src/main` or `src/test`);
   *  - library operators build native columns with the typed
   *    `GraftFunctions` constructors, never through the session's function
   *    registry (`graft_*` SQL names exist for SQL text only);
   *  - library code takes parameters, not environment variables (only the
-  *    entry points and `GraftSession` read the environment). */
+  *    entry points and `GraftSession` read the environment);
+  *  - temporary directories in `src/main` come from [[Scratch]], which
+  *    deletes them with their context. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get(sys.props("user.dir"))
@@ -53,5 +55,14 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(lib.nonEmpty)
     assert(hits(lib, "sys.env") === Nil)
     assert(hits(lib, "System.getenv") === Nil)
+  }
+
+  test("Scratch is the only temp-directory site in src/main") {
+    val main = scalaFiles("src/main/scala")
+    val bridge = "src/main/scala/org/apache/spark/GraftListenerBridge.scala"
+    // covers java.nio's createTempDirectory and Spark's createTempDir
+    assert(hits(main, "createTempDir") === Seq(bridge))
+    assert(hits(main, "shutdownDeletedTempDir(") ===
+      Seq("src/main/scala/graft/Scratch.scala", bridge))
   }
 }

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 
 import graft.{SparkEntry, SparkSuite}
-import graft.apps.SoakAudit
 
 /** PLANS.md's invariants, enforced: the physical-plan properties the
   * 100 TB design depends on are asserted here so a regression (a lost
@@ -145,12 +144,6 @@ class PlanInvariantsSpec extends SparkSuite {
       "sim_ivfpq_append", "sim_ivfpq_search", "sim_ivfpq_topk",
       "sim_lsh_topk", "sim_near_dup", "uv_approx", "uv_sketch_daily",
       "value_percentiles_approx"))
-    // the dev tools resolve gates ++ soaks: a soak must never shadow a gate
-    val soaks = SoakAudit.soakQueries.keySet
-    assert(soaks.forall(_.startsWith("soak_")),
-      s"soak names without the soak_ prefix: ${soaks.filterNot(_.startsWith("soak_"))}")
-    assert((soaks intersect names.toSet).isEmpty,
-      s"soak names that shadow a gate: ${soaks intersect names.toSet}")
   }
 
   test("naive declarative sliding window gets the slice rollup automatically") {
