@@ -106,8 +106,9 @@ object SliceRollupRule extends Rule[LogicalPlan] {
     // Batch-only: on a streaming plan the outer aggregate's reconstructed
     // window struct no longer carries the event-time/watermark metadata,
     // so the rewritten query fails Spark's unsupported-operation check
-    // (append aggregation without watermark). Streaming callers get the
-    // equivalent shape explicitly via StreamWindows.slidingCountRollupStream.
+    // (append aggregation without watermark). Streaming callers use
+    // StreamWindows.slidingCountRollupStream: one stateful operator that
+    // keeps per-key slice counts, with the same output.
     if (expand.child.isStreaming) return None
     // Idempotence: our own output is Aggregate-over-Expand too, and with
     // wrapped-aggregate decomposition it would match again — the _rollup_

@@ -12,11 +12,13 @@ import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedChe
 
 /**
  * Streaming checkpoint writes (offset and commit logs, state-store delta
- * and snapshot files) without forking a process per file.
+ * and snapshot files, their directories) without forking a process per
+ * file.
  *
  * Without libhadoop, Hadoop's local file system runs `chmod` for every
- * file it creates, and the `FileContext` rename Spark uses by default runs
- * `readlink` twice per rename. On `file:` paths this manager writes the
+ * file and directory it creates, and the `FileContext` rename Spark uses
+ * by default runs `readlink` twice per rename. On `file:` paths this
+ * manager makes directories with `Files.createDirectories`, writes the
  * temp file with a plain `FileOutputStream` and moves it into place with
  * one `rename(2)`, keeping the write-temp-then-rename atomicity, the
  * no-overwrite check and `cancel()`. Every other scheme gets Spark's
@@ -54,12 +56,21 @@ object LocalCheckpointFileManager {
     if (spark.conf.getOption(ConfKey).isEmpty)
       spark.conf.set(ConfKey, classOf[LocalCheckpointFileManager].getName)
 
-  /** Reads, listings, `mkdirs` and deletes stay on the checksummed local
-    * file system; only the temp-file create and the rename bypass it. */
+  /** Reads, listings and deletes stay on the checksummed local file
+    * system; the temp-file create, the rename and directory creation
+    * bypass it (its `mkdirs` forks a `chmod` per directory). */
   private final class Local(path: Path, conf: Configuration)
       extends FileSystemBasedCheckpointFileManager(path, conf) {
 
     private def file(p: Path): File = new File(fs.makeQualified(p).toUri)
+
+    override def mkdirs(p: Path): Unit = Files.createDirectories(file(p).toPath)
+
+    override def createCheckpointDirectory(): Path = {
+      val qualified = fs.makeQualified(path)
+      Files.createDirectories(file(qualified).toPath)
+      qualified
+    }
 
     override def createTempFile(p: Path): FSDataOutputStream = {
       val f = file(p)

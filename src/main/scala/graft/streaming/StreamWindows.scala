@@ -1,10 +1,12 @@
 package graft.streaming
 
+import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.Windows
 
@@ -34,24 +36,93 @@ object StreamWindows {
       .select(keys.map(col) :+ col("window.end").cast("long").as("window_end") :+ col("cnt"): _*)
   }
 
+  /** Per-key state of [[slidingCountRollupStream]]: counted slices by
+    * ascending slice end (epoch sec) with their counts, and the end of the
+    * last window emitted (public: Spark's encoder codegen cannot reach a
+    * private case class). */
+  final case class SliceCounts(ends: Array[Long], counts: Array[Long], emitted: Long)
+
+  /** One event's slice end (epoch sec), the input row of
+    * [[slidingCountRollupStream]]'s operator. */
+  final case class SliceEnd(slice_end: Long)
+
   /**
-   * Streaming form of `Windows.slidingCountRollup`: two chained stateful
-   * window aggregations (Spark ≥3.4 supports `window()` over a window
-   * column) — rows aggregate into tumbling slide-width slices, closed
-   * slices roll up into the sliding windows containing them. Shuffle and
-   * state volume scale with |keys × slices|, not size/slide × rows.
-   * Append mode: a window emits once its last slice's watermark passes.
+   * Streaming form of `Windows.slidingCountRollup`, as ONE stateful
+   * operator: a `flatMapGroupsWithState` keyed by the key columns, whose
+   * state per key holds the counts of its slide-width slices and the last
+   * window end it emitted. One narrow row per event (key struct, slice
+   * end, event time) crosses the exchange; no row fans out to its
+   * size/slide windows. A micro-batch runs two stages with one state
+   * store, where the chained form (slice aggregation, then a window
+   * aggregation over it) ran three with two. State holds |keys × open
+   * slices| counts.
+   *
+   * Append mode: a window is emitted once, with the sum of its slices,
+   * in the batch whose watermark reaches its end (end ≤ watermark) — the
+   * batch in which Spark's append-mode window aggregation emits it. An
+   * event-time timer fires the key when no new row arrives; a slice
+   * leaves the state with its last window. Windows with no counted slice
+   * are not emitted.
+   *
+   * Late rows: Spark drops a row at or behind the watermark before it
+   * reaches an event-time-timeout operator and counts it in
+   * `numRowsDroppedByWatermark`, whether or not its slice is still open
+   * (the chained form dropped a row only once its slice had closed).
+   *
+   * Checkpoints of the earlier chained form (two window aggregations)
+   * do not carry over: a query restarted from one fails in its first
+   * batch with `STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA`
+   * instead of resuming with wrong counts; start it from a new checkpoint.
    */
   def slidingCountRollupStream(df: DataFrame, tsCol: String, keys: Seq[String],
                                sizeSec: Long, slideSec: Long,
                                watermarkDelay: String): DataFrame = {
     require(sizeSec % slideSec == 0, "size must be a multiple of slide")
-    df.eventTimeWatermark(tsCol, watermarkDelay)
-      .groupBy((window(col(tsCol), s"$slideSec seconds") +: keys.map(col)): _*)
-      .agg(count(lit(1)).as("_slice_cnt"))
-      .groupBy((window(col("window"), s"$sizeSec seconds", s"$slideSec seconds") +: keys.map(col)): _*)
-      .agg(sum(col("_slice_cnt")).as("cnt"))
-      .select(keys.map(col) :+ col("window.end").cast("long").as("window_end") :+ col("cnt"): _*)
+    val keyType = StructType(keys.map(k => df.schema(k)))
+    val outSchema = StructType(keyType.fields ++ Seq(
+      StructField("window_end", LongType, nullable = false),
+      StructField("cnt", LongType, nullable = false)))
+    val lastWindow = sizeSec - slideSec // a slice ending at s is in windows s .. s + lastWindow
+    df.select(struct(keys.map(col): _*).as("_k"),
+        window(col(tsCol), s"$slideSec seconds").getField("end").cast("long").as("slice_end"),
+        col(tsCol).as("_t"))
+      .eventTimeWatermark("_t", watermarkDelay)
+      .groupBy(col("_k"))
+      .as(Encoders.row(StructType(Seq(StructField("_k", keyType)))), Encoders.product[SliceEnd])
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (key: Row, rows: Iterator[SliceEnd], state: GroupState[SliceCounts]) =>
+          val slices = mutable.TreeMap.empty[Long, Long]
+          var emitted = Long.MinValue
+          state.getOption.foreach { st =>
+            st.ends.indices.foreach(i => slices(st.ends(i)) = st.counts(i))
+            emitted = st.emitted
+          }
+          rows.foreach(r => slices(r.slice_end) = slices.getOrElse(r.slice_end, 0L) + 1L)
+          // the first slice with a window after `emitted`
+          def firstOpen: Long = if (emitted == Long.MinValue) emitted else emitted - lastWindow + 1L
+          // the first window after `emitted` that holds a counted slice
+          def next(): Option[Long] =
+            slices.keysIteratorFrom(firstOpen).nextOption().map(s => math.max(s, emitted + slideSec))
+          val wmMs = state.getCurrentWatermarkMs()
+          val k = key.getStruct(0).toSeq
+          val out = ArrayBuffer.empty[Row]
+          var end = next()
+          while (end.exists(_ * 1000L <= wmMs)) {
+            val e = end.get
+            out += Row.fromSeq(k ++ Seq(e, slices.range(e - lastWindow, e + 1L).values.sum))
+            emitted = e
+            end = next()
+          }
+          end match {
+            case None => state.remove()
+            case Some(e) =>
+              val open = slices.rangeFrom(firstOpen)
+              state.update(SliceCounts(open.keys.toArray, open.values.toArray, emitted))
+              // Spark fires a timer once the watermark passes it: end ≤ watermark
+              state.setTimeoutTimestamp(e * 1000L - 1L)
+          }
+          out.iterator
+      }(Encoders.product[SliceCounts], Encoders.row(outSchema))
   }
 
   /**

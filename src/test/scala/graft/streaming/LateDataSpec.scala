@@ -2,10 +2,15 @@ package graft.streaming
 
 import java.io.PrintWriter
 import java.net.ServerSocket
+import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.collection.mutable.ListBuffer
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryException, StreamingQueryProgress}
 
 import graft.SparkSuite
 
@@ -244,27 +249,99 @@ class LateDataSpec extends SparkSuite {
     assert(batch.size === 3, s"expected 3 sessions, got $batch")
   }
 
-  test("streaming slice roll-up ≡ batch sliding count for closed windows") {
+  /** One run of the sliding-count roll-up over `batches` into a sink that
+    * keeps each row with the id of the batch that emitted it, with the
+    * query stopped and restarted from its checkpoint after the first
+    * `restartAfter` batches; returns the rows and every batch's progress. */
+  private def rollupRun(batches: Seq[Seq[(String, Long)]], restartAfter: Int = 0)
+      : (Seq[(Long, String, Long, Long)], Seq[StreamingQueryProgress]) = {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, Long)]
     val src = input.toDS().select(col("_1").as("k"), col("_2").cast("timestamp").as("ts"))
-    val rolled = StreamWindows.slidingCountRollupStream(src, "ts", Seq("k"),
-      sizeSec = 3600L, slideSec = 300L, watermarkDelay = "0 seconds")
-    val q = rolled.writeStream.format("memory").queryName("roll")
-      .outputMode("append").start()
+    val ckpt = Files.createTempDirectory("graft_rollup").toString
+    val rows = ListBuffer.empty[(Long, String, Long, Long)]
+    val progress = ListBuffer.empty[StreamingQueryProgress]
+    def start() = StreamWindows.slidingCountRollupStream(src, "ts", Seq("k"),
+        sizeSec = 3600L, slideSec = 300L, watermarkDelay = "0 seconds")
+      .writeStream.outputMode("append").option("checkpointLocation", ckpt)
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        val got = b.as[(String, Long, Long)].collect()
+        rows.synchronized(rows ++= got.map { case (k, e, c) => (id, k, e, c) })
+        ()
+      }.start()
+    def feed(bs: Seq[Seq[(String, Long)]]): Unit = {
+      val q = start()
+      try bs.foreach { b => input.addData(b); q.processAllAvailable() }
+      finally { q.stop(); progress ++= q.recentProgress.filter(_.durationMs.containsKey("addBatch")) }
+    }
+    if (restartAfter > 0) feed(batches.take(restartAfter))
+    feed(batches.drop(restartAfter))
+    (rows.toList, progress.toList)
+  }
+
+  // a: slices 300, 600, 3900; b: slices 300, 4200. After the third batch
+  // the watermark is 4100 s: the fourth batch's rows are behind it, one
+  // (a, 4000) in the still-open slice 4200, one (b, 3000) in the closed
+  // slice 3300. The last two batches close every window.
+  private val rollupBatches = Seq(
+    Seq(("a", 10L), ("b", 20L)), Seq(("a", 400L)), Seq(("a", 3800L), ("b", 4100L)),
+    Seq(("a", 4000L), ("b", 3000L)),
+    Seq(("zz", 1000000L)), Seq(("zz", 2000000L)))
+
+  test("streaming slice roll-up ≡ batch sliding count for closed windows") {
+    val (out, progress) = rollupRun(rollupBatches)
     val data = Seq(("a", 10L), ("a", 400L), ("b", 20L), ("a", 3800L), ("b", 4100L))
-    try {
-      input.addData(data); q.processAllAvailable()
-      input.addData(Seq(("zz", 1000000L))); q.processAllAvailable() // close all
-      input.addData(Seq(("zz", 2000000L))); q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("roll").filter(col("k") =!= "zz")
-      .as[(String, Long, Long)].collect().toSet
+    val streamed = out.filter(_._2 != "zz").map(r => (r._2, r._3, r._4)).toSet
     val batch = graft.operators.Windows.slidingCount(
         data.toDF("k", "sec").select(col("k"), timestamp_seconds(col("sec")).as("ts")),
         "ts", Seq("k"), "1 hour", "5 minutes")
       .as[(String, Long, Long)].collect().toSet
     assert(streamed === batch)
+
+    // one operator; each window once, in the first batch whose watermark
+    // has reached its end, the batch the native append aggregation uses
+    assert(progress.forall(_.stateOperators.length == 1))
+    val windows = out.map(r => (r._2, r._3))
+    assert(windows.distinct.size === windows.size, s"a window was emitted twice: $out")
+    val watermarkMs = progress.map(p => p.batchId ->
+      java.time.Instant.parse(p.eventTime.get("watermark")).toEpochMilli).toMap
+    out.foreach { case (id, k, end, _) =>
+      val first = watermarkMs.filter(_._2 >= end * 1000L).keys.min
+      assert(id === first, s"($k, $end) emitted in batch $id, its watermark reached the end in $first")
+    }
+    assert(out.map(_._1).distinct.size >= 3, "windows close over several batches")
+
+    // rows at or behind the watermark are dropped, open slice or not
+    val late = progress.filter(_.numInputRows == 2L).filter(p =>
+      watermarkMs(p.batchId) == 4100000L)
+    assert(late.map(_.stateOperators.head.numRowsDroppedByWatermark) === Seq(2L))
+
+    // a restart from the query's own checkpoint emits the same rows
+    val (resumed, _) = rollupRun(rollupBatches, restartAfter = 3)
+    assert(resumed.sorted === out.sorted)
+  }
+
+  test("slice roll-up refuses a checkpoint of the chained two-aggregation form") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(String, Long)]
+    val src = input.toDS().select(col("_1").as("k"), col("_2").cast("timestamp").as("ts"))
+    val ckpt = Files.createTempDirectory("graft_rollup_chained").toString
+    val chained = src.withWatermark("ts", "0 seconds")
+      .groupBy(window(col("ts"), "300 seconds"), col("k")).agg(count(lit(1)).as("_slice_cnt"))
+      .groupBy(window(col("window"), "3600 seconds", "300 seconds"), col("k"))
+      .agg(sum(col("_slice_cnt")).as("cnt"))
+      .select(col("k"), col("window.end").cast("long").as("window_end"), col("cnt"))
+    def run(df: DataFrame, data: Seq[(String, Long)]): Unit = {
+      val q = df.writeStream.outputMode("append").option("checkpointLocation", ckpt)
+        .foreachBatch { (b: DataFrame, _: Long) => b.collect(); () }.start()
+      try { input.addData(data); q.processAllAvailable() } finally q.stop()
+    }
+    run(chained, Seq(("a", 10L), ("a", 400L)))
+    // Spark's state metadata names two aggregations where the plan has
+    // one flatMapGroupsWithState: the restart fails, it does not resume
+    val e = intercept[StreamingQueryException](run(StreamWindows.slidingCountRollupStream(
+      src, "ts", Seq("k"), 3600L, 300L, "0 seconds"), Seq(("a", 4000L))))
+    assert(e.getMessage.contains("STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA"))
   }
 
   test("S2: socket source delivers lines") {

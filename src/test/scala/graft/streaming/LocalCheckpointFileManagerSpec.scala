@@ -101,41 +101,48 @@ class LocalCheckpointFileManagerSpec extends SparkSuite {
     finally in.close()
   }
 
+  // The guard also covers the query's start and its first batch; the
+  // name predates that.
   test("fork guard: no process starts once the first micro-batch has committed") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[AdClickEvent]
-    val q = StreamDetectors.blacklistStream(input.toDS(), threshold = 3L)
-      .writeStream.format("memory").queryName(s"fork_guard_${System.nanoTime()}")
-      .option("checkpointLocation", Files.createTempDirectory("graft_fork_guard").toString)
-      .start()
-    def batch(i: Int): Unit = {
-      input.addData((1L to 8L).map(u => AdClickEvent(u, u % 3, "p", "c", 1000L + i)))
-      q.processAllAvailable()
-    }
+    val ckpt = Files.createTempDirectory("graft_fork_guard").resolve("ckpt").toString
+    // A session the GC collects forks `rm -rf` for its artifact
+    // directory (Spark's ArtifactManager cleaner, on the JVM Cleaner
+    // thread). Earlier suites' stopped streams leave such sessions
+    // behind; collect them now so the recording sees only what the
+    // query's start and its first three batches start.
+    (1 to 2).foreach { _ => System.gc(); Thread.sleep(500) }
     val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.start()
     try {
-      batch(0)
-      // A session the GC collects forks `rm -rf` for its artifact
-      // directory (Spark's ArtifactManager cleaner, on the JVM Cleaner
-      // thread). Earlier suites' stopped streams leave such sessions
-      // behind; collect them now so the recording sees only what
-      // batches 2 and 3 start.
-      (1 to 2).foreach { _ => System.gc(); Thread.sleep(500) }
-      rec.enable("jdk.ProcessStart")
-      rec.start()
-      batch(1)
-      batch(2)
-      rec.stop()
+      // the checkpoint directory, its logs, the state store's directories
+      // and its schema and operator metadata are all made from here on
+      val q = StreamDetectors.blacklistStream(input.toDS(), threshold = 3L)
+        .writeStream.format("memory").queryName(s"fork_guard_${System.nanoTime()}")
+        .option("checkpointLocation", ckpt)
+        .start()
+      try {
+        (0 until 3).foreach { i =>
+          input.addData((1L to 8L).map(u => AdClickEvent(u, u % 3, "p", "c", 1000L + i)))
+          q.processAllAvailable()
+        }
+        rec.stop()
+      } finally q.stop()
       val jfr = Files.createTempFile("graft_fork_guard", ".jfr")
       rec.dump(jfr)
+      // each start as its program and its first caller outside the JDK and Hadoop
       val programs = RecordingFile.readAllEvents(jfr).asScala
         .filter(_.getEventType.getName == "jdk.ProcessStart")
-        .map(_.getString("command").takeWhile(_ != ' '))
-      assert(programs.isEmpty, "processes started by batches 2 and 3: " +
+        .map { e =>
+          val caller = Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala)
+            .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}")
+            .find(m => !m.startsWith("java.") && !m.startsWith("org.apache.hadoop."))
+          s"${e.getString("command").takeWhile(_ != ' ')} from ${caller.getOrElse("?")}"
+        }
+      assert(programs.isEmpty, "processes started by the query's start and batches 1-3: " +
         programs.groupBy(identity).map { case (c, n) => s"$c ×${n.size}" }.mkString(", "))
-    } finally {
-      q.stop()
-      rec.close()
-    }
+    } finally rec.close()
   }
 }
